@@ -35,7 +35,6 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="sf_dir (local) or table path")
     ap.add_argument("--output", required=True, help="workdir for checkpoints/triples")
-    ap.add_argument("--no-lineage", action="store_true")
     ap.add_argument(
         "--named-graphs",
         action="store_true",
@@ -91,9 +90,7 @@ def main():
         print(json.dumps(summary))
         spark.stop()
         return
-    triples, pipe = run_pipeline(
-        spark, args.input, args.output, collect_lineage=not args.no_lineage
-    )
+    triples, pipe = run_pipeline(spark, args.input, args.output)
     summary = {
         "triples": triples.count(),
         "stages": [

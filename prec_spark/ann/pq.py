@@ -218,7 +218,7 @@ def _pq_parts(
         books = pq_codebooks(spark, vecs, dim)
         codes, qdf = build_codes(), build_qdf()
     else:
-        from ..cached import shared_cached_df, shared_checkpointed_df
+        from ..cached import shared_checkpointed_df
 
         books = pq_codebooks(spark, vecs, dim, cache_key=sf_dir)
         codes = shared_checkpointed_df(spark, f"pq_codes:{sf_dir}", build_codes)
@@ -279,7 +279,7 @@ def ann_ivfpq(
         cents = train_kmeans(spark, vecs, _k_cells(vecs.count()))
         cells = _assign(vecs, cents).select("vec_id", "cell")
     else:
-        from ..cached import shared_cached_df, shared_checkpointed_df
+        from ..cached import shared_checkpointed_df
 
         cents = shared_checkpointed_df(
             spark, f"ivf_centroids:{sf_dir}",

@@ -207,7 +207,7 @@ def ann_ivf(
     if centroids is not None:
         cents = centroids
     elif vectors is None:
-        from ..cached import shared_cached_df, shared_checkpointed_df
+        from ..cached import shared_checkpointed_df
 
         cents = shared_checkpointed_df(
             spark, f"ivf_centroids:{sf_dir}",
@@ -437,7 +437,7 @@ def ann_lsh(
         # the 128 interpreted hyperplane dots per vector are the
         # expensive part — hash the corpus once per session ("build the
         # LSH index once"), like the IVF centroids
-        from ..cached import shared_cached_df, shared_checkpointed_df
+        from ..cached import shared_checkpointed_df
 
         buckets = shared_checkpointed_df(
             spark, f"lsh_buckets:{sf_dir}",

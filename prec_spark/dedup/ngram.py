@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cached import shared_cached_df, shared_checkpointed_df
+from ..cached import shared_cached_df
 from .common import SHINGLES_CTE, doc_shingles
 
 THRESHOLD = 0.3

@@ -352,7 +352,7 @@ def cached_simhash_graph(spark: SparkSession, sf_dir: str):
     self-join + Hamming verify) is paid once per session and shared by
     the hamming and CC variants, like the IVF centroid / LSH bucket
     caches."""
-    from ..cached import shared_cached_df, shared_checkpointed_df
+    from ..cached import shared_checkpointed_df
 
     fp = cached_doc_fingerprint(spark, sf_dir).select("doc_id", "simhash64")
     reps = shared_checkpointed_df(

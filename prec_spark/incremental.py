@@ -284,7 +284,7 @@ def kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The snapshot-1 store is session-cached: in production it is a
     MATERIALIZED table the maintenance job reads, not something it
     recomputes — only the first call pays its construction."""
-    from .cached import shared_cached_df, shared_checkpointed_df
+    from .cached import shared_checkpointed_df
 
     tbl = IceLiteTable(spark, _inc_table_root(spark, sf_dir))
     store = shared_checkpointed_df(

@@ -1,11 +1,20 @@
-"""The end-to-end KG-construction pipeline (BASELINE.json north_star):
+"""The end-to-end KG-construction pipeline (BASELINE.json north_star)
+as a graph of checkpointed stages, each reading its upstream
+checkpoints (prec_spark.checkpoint) instead of recomputing them:
 
-    transcripts -> PG projection -> [mention detect -> entity link ->
-    canonicalize] -> PRSC context application -> triple materialize
+    stage               reads
+    transcripts         the input table
+    pg_nodes            transcripts
+    pg_edges            transcripts
+    entity_links        transcripts (the one mention-regex scan)
+    canonical_entities  entity_links
+    kg_triples          pg_nodes, pg_edges, entity_links
 
-Stage boundaries are checkpoint-resumable (prec_spark.checkpoint); the
-final triples are written partitioned. `run_pipeline` is what bench.py
-times and what a spark-submit job on a real cluster would call.
+``kg_triples`` is the union of the PRSC triples of the PG elements and
+the mention triples, written as plain parquet; the elements no rule
+accepts go to ``_quarantine``, written once ``kg_triples`` has
+committed. `run_pipeline` is what jobs/run_pipeline.py and a
+spark-submit job on a real cluster call.
 
 Scale design notes:
 * transcripts are the only big input; every derived stage either
@@ -13,15 +22,19 @@ Scale design notes:
   narrow map
 * the rule catalog and the entity dictionary are broadcast
 * canonicalization is a salted two-phase aggregation (hot entities)
-* the final dropDuplicates is the single unavoidable wide shuffle on
-  the output key (set semantics of an RDF graph)
+* the PRSC triples are one pass over the elements with no dedup:
+  ``pg_edges`` emits at most one NEXT, IN and USES edge per turn, so
+  (src, dst, label) is unique and every template is duplicate-free
+  (``unique_edge_triples``)
+* the quarantine check rides on that pass as an observed count; the
+  elements are scanned again only when something was quarantined
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .checkpoint import CheckpointedPipeline
 from .contexts.model import PRSCCatalog
@@ -37,24 +50,33 @@ def run_pipeline(
     sf_dir: str,
     workdir: str,
     context_ttl: str = TRANSCRIPT_CONTEXT,
-    collect_lineage: bool = True,
 ) -> tuple[DataFrame, CheckpointedPipeline]:
     """Run (or resume) the full pipeline; returns (triples, pipeline)."""
-    pipe = CheckpointedPipeline(spark, workdir, collect_lineage=collect_lineage)
+    pipe = CheckpointedPipeline(spark, workdir)
     catalog = PRSCCatalog.from_turtle(context_ttl)
 
     transcripts = pipe.stage("transcripts", lambda: transcripts_df(spark, sf_dir))
     nodes = pipe.stage("pg_nodes", lambda: pg_nodes(transcripts))
     edges = pipe.stage("pg_edges", lambda: pg_edges(transcripts))
     links = pipe.stage("entity_links", lambda: entity_links(spark, sf_dir, transcripts))
-    pipe.stage("canonical_entities", lambda: canonical_entities(spark, sf_dir, transcripts))
+    pipe.stage("canonical_entities", lambda: canonical_entities(spark, sf_dir, links=links))
+
+    observed = Observation()
+    quarantine = None
 
     def build_triples():
-        prsc_triples, quarantine = apply_prsc(spark, nodes, edges, catalog)
-        quarantine.write.mode("overwrite").parquet(os.path.join(workdir, "_quarantine"))
-        ment_triples = entity_triples(spark, sf_dir, transcripts)
+        nonlocal quarantine
+        prsc_triples, quarantine = apply_prsc(
+            spark, nodes, edges, catalog, unique_edge_triples=True, observation=observed
+        )
+        ment_triples = entity_triples(spark, sf_dir, links=links)
         # branches are internally dedup'd and disjoint by subject/predicate
         return prsc_triples.unionByName(ment_triples)
 
     triples = pipe.stage("kg_triples", build_triples)
+    if quarantine is not None:
+        # kg_triples was written just now, so the observation is set
+        if observed.get["quarantined"] == 0:
+            quarantine = spark.createDataFrame([], quarantine.schema)
+        quarantine.write.mode("overwrite").parquet(os.path.join(workdir, "_quarantine"))
     return triples, pipe

@@ -45,8 +45,14 @@ rounds.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import _mem_bytes
+
+_log = logging.getLogger(__name__)
 
 _RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _RDFS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -133,19 +139,33 @@ def _neighbor_min(iund: DataFrame, lab: DataFrame) -> DataFrame:
 _BCAST_ROW_BYTES = 48
 
 
+def broadcast_threshold(spark) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes,
+    parsed like Spark parses it ('67108864', '10m', '64MB'); 0 when
+    broadcasting is disabled (a negative value) or the value does not
+    parse."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip()
+    if raw.startswith("-"):
+        return 0  # disabled; checked first, _mem_bytes("-1") is 2**63
+    n = _mem_bytes(raw)
+    return 0 if n >= 2**63 else n
+
+
 def fits_broadcast(spark, n_rows: int) -> bool:
     """True when an ``n_rows`` node-sized (long, long) frame fits the
     session's own broadcast threshold — the same size rule Spark's
     planner applies, re-stated here because checkpointed frames carry
     no statistics for the planner to judge.  At cluster scale (10^9
     nodes) this is False and the iterate loops keep their co-partitioned
-    shuffle formulation; locally it enables shuffle-free rounds."""
-    try:
-        raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        thresh = int(raw)
-    except Exception:
-        return False
-    return 0 < n_rows * _BCAST_ROW_BYTES <= thresh
+    shuffle formulation; locally it enables shuffle-free rounds.  The
+    chosen path is logged."""
+    thresh = broadcast_threshold(spark)
+    fast = 0 < n_rows * _BCAST_ROW_BYTES <= thresh
+    _log.info(
+        "fits_broadcast: %d rows x %d B, threshold %d B -> %s path",
+        n_rows, _BCAST_ROW_BYTES, thresh, "broadcast" if fast else "shuffle",
+    )
+    return fast
 
 
 def selfloop_edges(ids: DataFrame, iund: DataFrame) -> DataFrame:

@@ -100,7 +100,7 @@ def triangle_counts_ids(ids: DataFrame, iund: DataFrame) -> DataFrame:
     so the (degree, node) orientation order is bit-identical), and the
     node-sized degree/back-map sides broadcast when they fit the
     session's threshold."""
-    from .components import fits_broadcast
+    from .components import broadcast_threshold, fits_broadcast
 
     spark = ids.sparkSession
     n_nodes = ids.count()
@@ -122,11 +122,7 @@ def triangle_counts_ids(ids: DataFrame, iund: DataFrame) -> DataFrame:
     # the ids pack into 32 bits (dense nids, so n_nodes bounds them)
     # and the packed key set fits the session's broadcast threshold
     # (~24 B/row in a long-keyed hash relation).
-    try:
-        _thresh = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:
-        _thresh = 0
-    bcast_close = n_nodes < (1 << 31) and 0 < n_e * 24 <= _thresh
+    bcast_close = n_nodes < (1 << 31) and 0 < n_e * 24 <= broadcast_threshold(spark)
     ds = deg.select(F.col("n").alias("isrc"), F.col("deg").alias("dsrc"))
     dd = deg.select(F.col("n").alias("idst"), F.col("deg").alias("ddst"))
     e = (

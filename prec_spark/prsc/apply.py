@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..contexts.model import (
@@ -243,6 +243,7 @@ def apply_prsc(
     catalog: PRSCCatalog,
     unique_edge_triples: bool = False,
     with_graphs: bool = False,
+    observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Apply a PRSC context. Returns (triples, quarantine).
 
@@ -252,6 +253,12 @@ def apply_prsc(
                 ('<>' = default graph).
     quarantine: (element_id, kind, labels_key, props_key, reason) —
                 elements the reference would throw on.
+
+    With an ``observation``, the element pass of the triples counts the
+    quarantine rows into its metric ``quarantined`` as the triples'
+    first action runs, so a caller can skip writing an empty quarantine
+    without scanning the elements again. Task retries can inflate the
+    count; only its zero test is exact.
     """
     compiled = CompiledCatalog.from_catalog(catalog)
     if not with_graphs and any(g != "<>" for g in compiled.graphs.values()):
@@ -270,9 +277,8 @@ def apply_prsc(
         F.broadcast(rules_df), on=["kind", "labels_key", "props_key"], how="left"
     )
 
-    quarantine = joined.filter(
-        F.col("rule_idx").isNull() | F.col("multi_valued")
-    ).select(
+    quarantined = F.col("rule_idx").isNull() | F.col("multi_valued")
+    quarantine = joined.filter(quarantined).select(
         "element_id",
         "kind",
         "labels_key",
@@ -282,6 +288,8 @@ def apply_prsc(
         .alias("reason"),
     )
 
+    if observation is not None:
+        joined = joined.observe(observation, F.count_if(quarantined).alias("quarantined"))
     matched = joined.filter(F.col("rule_idx").isNotNull() & ~F.col("multi_valued"))
 
     # ---- κ-based duplicate analysis (driver) -------------------------
@@ -372,7 +380,13 @@ def apply_prsc(
     if b_str is not None:
         outputs.append(b_str.dropDuplicates(out_cols))
 
-    if not outputs:
+    if not outputs and observation is not None:
+        # no template at all: an empty explode keeps the observed
+        # element pass in the plan (an empty relation would prune it
+        # and the observation would never fire)
+        fields = ",".join(f"{c}:string" for c in out_cols)
+        triples = matched.select(F.inline(F.array().cast(f"array<struct<{fields}>>")))
+    elif not outputs:
         triples = spark.createDataFrame(
             [], ", ".join(f"{c} STRING" for c in out_cols)
         )

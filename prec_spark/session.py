@@ -13,6 +13,7 @@ from pyspark.sql import SparkSession
 
 #: JVM memory-string suffixes, in bytes (plain numbers are bytes)
 _MEM_UNITS = {
+    "b": 1,
     "k": 1024, "kb": 1024,
     "m": 1024**2, "mb": 1024**2,
     "g": 1024**3, "gb": 1024**3,

@@ -4,9 +4,9 @@ These stages have no counterpart in the reference (its "extraction" is
 the PG API scan, SURVEY.md §2.7) — they are the transcript-domain
 stages required by BASELINE.json `north_star`:
 
-* mention detection — Arrow-batched pandas UDF (vectorized
-  `Series.str.findall` over a compiled dictionary regex); never
-  per-row Python
+* mention detection — one JVM ``regexp_extract_all`` over the
+  compiled dictionary regex (:func:`mentions_expr`); no Python in the
+  scan
 * entity linking — broadcast join of mentions against the (tiny)
   entity dictionary + a deterministic surface-similarity score
 * canonicalization — salted two-phase groupBy merging co-referent
@@ -21,10 +21,8 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from ..transcripts import ENTITIES, transcripts_df, transcripts_oracle_sql
@@ -40,24 +38,6 @@ N_SALTS = 16
 MIN_SCORE = 0.5
 
 
-def find_mentions_udf():
-    """All dictionary-entity occurrences per text, in order.
-
-    Built lazily — pandas_udf needs an active SparkSession to resolve
-    its return type, so decoration can't happen at import time.
-
-    Retained as the Arrow-vectorized reference implementation; the
-    query paths use :func:`mentions_expr` (same matches, pure JVM) —
-    see that docstring for why.
-    """
-
-    @pandas_udf("array<string>")
-    def _find(texts: pd.Series) -> pd.Series:
-        return texts.str.findall(ENTITY_RE)
-
-    return _find
-
-
 def mentions_expr(col: str = "text"):
     """All dictionary-entity occurrences per text, in order — as a pure
     JVM expression (``regexp_extract_all`` over the same ``\\b``-guarded
@@ -65,11 +45,9 @@ def mentions_expr(col: str = "text"):
     identically for ASCII words; equivalence pinned in
     tests/test_mentions_expr.py).
 
-    This replaces the Arrow pandas-UDF scan on the query paths: the
-    dictionary regex needs no Python library, so the JVM built-in saves
-    the JVM->Arrow->pandas->JVM round-trip of the full text column on
-    every mention pass (guide §4.1 — prefer built-ins when they exist),
-    and plans lose their ArrowEvalPython nodes."""
+    The dictionary regex needs no Python library, so the JVM built-in
+    avoids a JVM->Arrow->pandas->JVM round-trip of the full text column
+    on every mention pass, and plans carry no ArrowEvalPython nodes."""
     import re as _re
 
     pat = r"\b(" + "|".join(map(_re.escape, ENTITIES)) + r")\b"
@@ -260,9 +238,16 @@ FROM ranked WHERE rn = 1 AND score >= {MIN_SCORE}
 
 
 def canonical_entities(
-    spark: SparkSession, sf_dir: str, transcripts: DataFrame | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    transcripts: DataFrame | None = None,
+    links: DataFrame | None = None,
 ) -> DataFrame:
     """Merge co-referent mentions into canonical entities.
+
+    ``links`` is an already-computed :func:`entity_links` frame (e.g.
+    the pipeline's ``entity_links`` checkpoint); without it the links
+    are derived from the transcripts.
 
     Salted two-phase aggregation: phase 1 groups by (entity_id, salt)
     — the hot entity's mentions spread over N_SALTS reducers — phase 2
@@ -273,7 +258,8 @@ def canonical_entities(
     scan. Deterministic output; at 100 TB the phase-1 combine happens
     map-side.
     """
-    links = entity_links(spark, sf_dir, transcripts)
+    if links is None:
+        links = entity_links(spark, sf_dir, transcripts)
     salted = links.withColumn(
         "salt", F.pmod(F.xxhash64("conv_id"), F.lit(N_SALTS))
     )
@@ -310,25 +296,35 @@ FROM l GROUP BY entity_id
 
 
 def entity_triples(
-    spark: SparkSession, sf_dir: str, transcripts: DataFrame | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    transcripts: DataFrame | None = None,
+    links: DataFrame | None = None,
 ) -> DataFrame:
     """Materialize mention/entity triples.
 
-    The mention triples are unique BY CONSTRUCTION: the per-turn
-    mention array is array_distinct'ed before the explode, and
-    (conv_id, turn_idx) is unique in transcripts — so the
-    (conv, turn, mention) dedup needs NO shuffle at all (it used to be
-    the job's largest exchange). The entity typing/name triples come
-    from the tiny distinct-mention dimension — the expensive
-    full-triple string dedup never happens."""
-    t = transcripts if transcripts is not None else transcripts_df(spark, sf_dir)
-    ments = t.select(
-        "conv_id",
-        "turn_idx",
-        F.explode(F.array_distinct(mentions_expr())).alias("mention"),
-    )
-    e = entities_df(spark)
-    links = ments.join(F.broadcast(e), ments["mention"] == e["entity_name"], "inner")
+    From the transcripts, the mention triples are unique BY
+    CONSTRUCTION: the per-turn mention array is array_distinct'ed
+    before the explode, and (conv_id, turn_idx) is unique in
+    transcripts — so the (conv, turn, mention) dedup needs NO shuffle
+    at all (it used to be the job's largest exchange). The entity
+    typing/name triples come from the tiny distinct-mention dimension —
+    the expensive full-triple string dedup never happens.
+
+    ``links`` is an already-computed :func:`entity_links` frame (one
+    row per occurrence); it replaces the regex scan of the transcripts
+    at the cost of a (conv, turn, mention) dedup over the links."""
+    if links is None:
+        t = transcripts if transcripts is not None else transcripts_df(spark, sf_dir)
+        ments = t.select(
+            "conv_id",
+            "turn_idx",
+            F.explode(F.array_distinct(mentions_expr())).alias("mention"),
+        )
+        e = entities_df(spark)
+        links = ments.join(F.broadcast(e), ments["mention"] == e["entity_name"], "inner")
+    else:
+        links = links.select("conv_id", "turn_idx", "mention").dropDuplicates()
     turn_bn = F.concat(
         F.lit("_:turn_"), F.col("conv_id"), F.lit("_"), F.col("turn_idx").cast("string")
     )

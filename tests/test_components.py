@@ -9,6 +9,7 @@ from prec_spark.plans.components import (
     SCHEMA_PREDICATES,
     components,
     components_oracle_sql,
+    fits_broadcast,
 )
 
 # two real components: {a,b,c,d} (chain + reification wiring) and
@@ -89,3 +90,36 @@ def test_components_partitioning_invariance(spark, tiny):
     one = {r["node"]: r["comp"] for r in components(tiny.coalesce(1)).collect()}
     many = {r["node"]: r["comp"] for r in components(tiny.repartition(7)).collect()}
     assert one == many
+
+
+class _Conf:
+    def __init__(self, threshold: str):
+        self.threshold = threshold
+
+    def get(self, key):
+        assert key == "spark.sql.autoBroadcastJoinThreshold"
+        return self.threshold
+
+
+class _Session:
+    def __init__(self, threshold: str):
+        self.conf = _Conf(threshold)
+
+
+@pytest.mark.parametrize(
+    "threshold, n_rows, fast",
+    [
+        ("67108864", 1000, True),
+        ("67108864", 67108864 // 48 + 1, False),
+        ("10m", 1000, True),  # a suffixed size parses, not the silent slow path
+        ("10m", 10 * 1024 * 1024 // 48 + 1, False),
+        ("-1", 1000, False),  # -1 disables broadcasting
+        ("10485760b", 1000, True),  # Spark's own rendering of its default
+        ("garbage", 1000, False),
+    ],
+)
+def test_fits_broadcast_parses_threshold(threshold, n_rows, fast, caplog):
+    with caplog.at_level("INFO", logger="prec_spark.plans.components"):
+        assert fits_broadcast(_Session(threshold), n_rows) is fast
+    path = "broadcast" if fast else "shuffle"
+    assert any(f"-> {path} path" in r.getMessage() for r in caplog.records)

@@ -1,10 +1,8 @@
-"""mentions_expr (JVM regexp_extract_all) must match the Arrow pandas
-UDF reference scan (Python re.findall) — the mention queries switched
-to the built-in for performance and the matches must be identical."""
+"""mentions_expr (JVM regexp_extract_all) must match Python's
+re.findall over the same dictionary regex (ENTITY_RE) — the mention
+scan runs in the JVM and its matches must be identical."""
 
-from pyspark.sql import functions as F
-
-from prec_spark.text.mentions import ENTITY_RE, find_mentions_udf, mentions_expr
+from prec_spark.text.mentions import ENTITY_RE, mentions_expr
 
 CASES = [
     "Ann told Dan about part 5 in line 2.",
@@ -23,13 +21,3 @@ def test_expr_matches_python_findall(spark):
     got = [r["m"] for r in df.select(mentions_expr().alias("m")).collect()]
     want = [ENTITY_RE.findall(t) for t in CASES]
     assert got == want
-
-
-def test_expr_matches_arrow_udf(spark):
-    df = spark.createDataFrame([(t,) for t in CASES], "text string")
-    a = [r["m"] for r in df.select(mentions_expr().alias("m")).collect()]
-    b = [
-        r["m"]
-        for r in df.select(find_mentions_udf()(F.col("text")).alias("m")).collect()
-    ]
-    assert a == b

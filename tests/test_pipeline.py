@@ -3,7 +3,23 @@
 import json
 import os
 
+import pytest
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
+from prec_spark.contexts.model import PRSCCatalog
+from prec_spark.flagship import TRANSCRIPT_CONTEXT
+from prec_spark.pg.projection import pg_edges, pg_nodes
 from prec_spark.pipeline import run_pipeline
+from prec_spark.prsc.apply import apply_prsc
+from prec_spark.text.mentions import canonical_entities, entity_links, entity_triples
+from prec_spark.transcripts import transcripts_df
+
+STAGES = (
+    "transcripts", "pg_nodes", "pg_edges", "entity_links", "canonical_entities", "kg_triples",
+)
+
+QUARANTINE_COLS = ["element_id", "kind", "labels_key", "props_key", "reason"]
 
 
 def test_pipeline_runs_and_resumes(spark, sf_dir, tmp_path):
@@ -37,6 +53,98 @@ def test_pipeline_partial_resume(spark, sf_dir, tmp_path):
     assert by_stage["transcripts"].resumed
     assert not by_stage["kg_triples"].resumed
     assert triples.count() > 0
+
+
+def _same_rows(a, b) -> bool:
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_links_keyword_matches_transcripts_form(spark, sf_dir):
+    """Stages fed the entity_links checkpoint equal their forms that
+    re-derive the links from the transcripts."""
+    t = transcripts_df(spark, sf_dir)
+    links = entity_links(spark, sf_dir, t)
+    assert _same_rows(
+        canonical_entities(spark, sf_dir, links=links), canonical_entities(spark, sf_dir, t)
+    )
+    assert _same_rows(
+        entity_triples(spark, sf_dir, links=links), entity_triples(spark, sf_dir, t)
+    )
+
+
+def test_pg_edges_unique_src_dst_label(spark, sf_dir):
+    """The data contract run_pipeline relies on for
+    apply_prsc(unique_edge_triples=True)."""
+    dup = (
+        pg_edges(transcripts_df(spark, sf_dir))
+        .groupBy("src_id", "dst_id", "label")
+        .count()
+        .filter(F.col("count") > 1)
+    )
+    assert dup.count() == 0
+
+
+@pytest.fixture(scope="module")
+def fresh_and_resumed(spark, sf_dir, tmp_path_factory):
+    """One workdir run fresh, then resumed."""
+    workdir = str(tmp_path_factory.mktemp("stage-graph") / "pipe")
+    run_pipeline(spark, sf_dir, workdir)
+    run_pipeline(spark, sf_dir, workdir)
+    return workdir
+
+
+def test_stage_metrics_are_exact(spark, fresh_and_resumed):
+    """rows and partitions in metrics.jsonl come from the written part
+    files' footers and must match the checkpoints, fresh and resumed."""
+    workdir = fresh_and_resumed
+    lines = [json.loads(l) for l in open(os.path.join(workdir, "metrics.jsonl"))]
+    assert [(m["stage"], m["resumed"]) for m in lines] == [
+        (s, r) for r in (False, True) for s in STAGES
+    ]
+    for m in lines:
+        path = os.path.join(workdir, m["stage"])
+        assert m["rows"] == spark.read.parquet(path).count(), m["stage"]
+        assert m["partitions"] == len(m["per_partition"]) > 0
+        assert sum(p["rows"] for p in m["per_partition"]) == m["rows"]
+
+
+def test_default_run_leaves_empty_quarantine(spark, fresh_and_resumed):
+    q = spark.read.parquet(os.path.join(fresh_and_resumed, "_quarantine"))
+    assert q.columns == QUARANTINE_COLS
+    assert q.count() == 0
+
+
+def test_quarantine_written_when_rule_missing(spark, sf_dir, tmp_path):
+    """A context without ex:UsesRule quarantines exactly the USES edges."""
+    uses_rule = """ex:UsesRule a prec:PRSCEdgeRule ;
+  prec:label "USES" ;
+  prec:produces << pvar:source ex:usesTool pvar:destination >> .
+"""
+    assert uses_rule in TRANSCRIPT_CONTEXT
+    workdir = str(tmp_path / "pipe")
+    run_pipeline(spark, sf_dir, workdir, context_ttl=TRANSCRIPT_CONTEXT.replace(uses_rule, ""))
+    q = spark.read.parquet(os.path.join(workdir, "_quarantine"))
+    uses = spark.read.parquet(os.path.join(workdir, "pg_edges")).filter(F.col("label") == "USES")
+    assert uses.count() > 0
+    assert _same_rows(
+        q.select("element_id", "kind", "reason"),
+        uses.select(
+            F.col("edge_id").alias("element_id"),
+            F.lit("edge").alias("kind"),
+            F.lit("no_rule_matches").alias("reason"),
+        ),
+    )
+
+
+def test_observation_fires_without_templates(spark, sf_dir):
+    """With no rule at all the triples still run the observed element
+    pass, so the quarantine gate never waits on an unset observation."""
+    t = transcripts_df(spark, sf_dir)
+    nodes, edges = pg_nodes(t), pg_edges(t)
+    obs = Observation()
+    triples, _ = apply_prsc(spark, nodes, edges, PRSCCatalog.from_turtle(""), observation=obs)
+    assert triples.count() == 0
+    assert obs.get["quarantined"] == nodes.count() + edges.count()
 
 
 def test_small_heap_guards_survive_gateway_reuse(spark):

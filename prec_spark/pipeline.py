@@ -13,7 +13,8 @@ checkpoints (prec_spark.checkpoint) instead of recomputing them:
 ``kg_triples`` is the union of the PRSC triples of the PG elements and
 the mention triples, written as plain parquet; the elements no rule
 accepts go to ``_quarantine``, written once ``kg_triples`` has
-committed. `run_pipeline` is what jobs/run_pipeline.py and a
+committed (a resume rewrites it when a run stopped in between).
+`run_pipeline` is what jobs/run_pipeline.py and a
 spark-submit job on a real cluster call.
 
 Scale design notes:
@@ -22,10 +23,11 @@ Scale design notes:
   narrow map
 * the rule catalog and the entity dictionary are broadcast
 * canonicalization is a salted two-phase aggregation (hot entities)
-* the PRSC triples are one pass over the elements with no dedup:
-  ``pg_edges`` emits at most one NEXT, IN and USES edge per turn, so
-  (src, dst, label) is unique and every template is duplicate-free
-  (``unique_edge_triples``)
+* the PRSC triples of the default context are one pass over the
+  elements with no dedup: ``pg_edges`` emits at most one NEXT, IN and
+  USES edge per turn, so (src, dst, label) is unique and an edge
+  template naming both endpoints is duplicate-free
+  (``unique_edge_triples``); any other template shape keeps its dedup
 * the quarantine check rides on that pass as an observed count; the
   elements are scanned again only when something was quarantined
 """
@@ -74,9 +76,14 @@ def run_pipeline(
         return prsc_triples.unionByName(ment_triples)
 
     triples = pipe.stage("kg_triples", build_triples)
+    q_path = os.path.join(workdir, "_quarantine")
     if quarantine is not None:
         # kg_triples was written just now, so the observation is set
         if observed.get["quarantined"] == 0:
             quarantine = spark.createDataFrame([], quarantine.schema)
-        quarantine.write.mode("overwrite").parquet(os.path.join(workdir, "_quarantine"))
+    elif not os.path.exists(os.path.join(q_path, "_SUCCESS")):
+        # kg_triples resumed from a run that stopped before _quarantine
+        quarantine = apply_prsc(spark, nodes, edges, catalog)[1]
+    if quarantine is not None:
+        quarantine.write.mode("overwrite").parquet(q_path)
     return triples, pipe

@@ -254,6 +254,10 @@ def apply_prsc(
     quarantine: (element_id, kind, labels_key, props_key, reason) —
                 elements the reference would throw on.
 
+    ``unique_edge_triples`` is the caller's promise that no two edges
+    share (src, dst, label); it lets a κ-singleton template that names
+    both pvar:source and pvar:destination skip the dedup.
+
     With an ``observation``, the element pass of the triples counts the
     quarantine rows into its metric ``quarantined`` as the triples'
     first action runs, so a caller can skip writing an empty quarantine
@@ -301,8 +305,9 @@ def apply_prsc(
     #    members, instantiations are injective — each element matches
     #    exactly ONE rule, so two equal strings would need the same
     #    element and the same template -> impossible. NO dedup ("free").
-    #  * a singleton non-self member (edge-unique shape) is free only
-    #    under the caller's unique-(src,dst,label) data contract;
+    #  * a singleton non-self member using both pvar:source and
+    #    pvar:destination (edge-unique shape) is free only under the
+    #    caller's unique-(src,dst,label) data contract;
     #  * any other shape (two templates of one rule sharing κ — the
     #    constant-vs-valueOf collision — or self/edge-unique mixtures)
     #    keeps the reference's full string dedup.
@@ -329,7 +334,11 @@ def apply_prsc(
         if all_self:
             return True
         if len(members) == 1 and unique_edge_triples:
-            return True  # κ-singleton edge-unique under the data contract
+            # κ-singleton: injective under the unique-(src,dst,label)
+            # contract only when it names both endpoints
+            r, ti = members[0]
+            cells = "".join(patterns_by_rule[r][ti])
+            return PH_SRC in cells and PH_DST in cells
         return False
 
     patterns_by_rule = {idx: patterns for idx, _k, _l, _p, patterns in compiled.rows}
@@ -380,16 +389,12 @@ def apply_prsc(
     if b_str is not None:
         outputs.append(b_str.dropDuplicates(out_cols))
 
-    if not outputs and observation is not None:
-        # no template at all: an empty explode keeps the observed
-        # element pass in the plan (an empty relation would prune it
-        # and the observation would never fire)
+    if not outputs:
+        # no template at all: an empty explode keeps the element pass in
+        # the plan (an empty relation would prune it, and an observation
+        # would never fire)
         fields = ",".join(f"{c}:string" for c in out_cols)
         triples = matched.select(F.inline(F.array().cast(f"array<struct<{fields}>>")))
-    elif not outputs:
-        triples = spark.createDataFrame(
-            [], ", ".join(f"{c} STRING" for c in out_cols)
-        )
     else:
         triples = outputs[0]
         for df in outputs[1:]:

@@ -2,6 +2,7 @@
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import Observation
@@ -43,8 +44,6 @@ def test_pipeline_runs_and_resumes(spark, sf_dir, tmp_path):
 
 def test_pipeline_partial_resume(spark, sf_dir, tmp_path):
     """Deleting a late checkpoint recomputes only that stage."""
-    import shutil
-
     workdir = str(tmp_path / "pipe2")
     _, _ = run_pipeline(spark, sf_dir, workdir)
     shutil.rmtree(os.path.join(workdir, "kg_triples"))
@@ -122,18 +121,44 @@ def test_quarantine_written_when_rule_missing(spark, sf_dir, tmp_path):
 """
     assert uses_rule in TRANSCRIPT_CONTEXT
     workdir = str(tmp_path / "pipe")
-    run_pipeline(spark, sf_dir, workdir, context_ttl=TRANSCRIPT_CONTEXT.replace(uses_rule, ""))
-    q = spark.read.parquet(os.path.join(workdir, "_quarantine"))
+    context = TRANSCRIPT_CONTEXT.replace(uses_rule, "")
+    run_pipeline(spark, sf_dir, workdir, context_ttl=context)
+    q_path = os.path.join(workdir, "_quarantine")
     uses = spark.read.parquet(os.path.join(workdir, "pg_edges")).filter(F.col("label") == "USES")
-    assert uses.count() > 0
-    assert _same_rows(
-        q.select("element_id", "kind", "reason"),
-        uses.select(
-            F.col("edge_id").alias("element_id"),
-            F.lit("edge").alias("kind"),
-            F.lit("no_rule_matches").alias("reason"),
-        ),
+    expected = uses.select(
+        F.col("edge_id").alias("element_id"),
+        F.lit("edge").alias("kind"),
+        F.lit("no_rule_matches").alias("reason"),
     )
+    assert uses.count() > 0
+    assert _same_rows(spark.read.parquet(q_path).select("element_id", "kind", "reason"), expected)
+
+    # a run that stopped after kg_triples committed: the resume restores
+    # _quarantine without recomputing any stage
+    shutil.rmtree(q_path)
+    _, pipe = run_pipeline(spark, sf_dir, workdir, context_ttl=context)
+    assert all(m.resumed for m in pipe.metrics)
+    q = spark.read.parquet(q_path)
+    assert q.columns == QUARANTINE_COLS
+    assert _same_rows(q.select("element_id", "kind", "reason"), expected)
+
+
+def test_one_sided_edge_template_keeps_set_semantics(spark, sf_dir, tmp_path):
+    """An edge template naming only one endpoint repeats its triple once
+    per edge, so it must keep its dedup even under the pipeline's
+    unique-(src, dst, label) contract."""
+    in_rule = "prec:produces << pvar:source ex:inConversation pvar:destination >> ."
+    assert in_rule in TRANSCRIPT_CONTEXT
+    context = TRANSCRIPT_CONTEXT.replace(
+        in_rule, "prec:produces << pvar:destination a ex:ConversationWithTurns >> ."
+    )
+    triples, _ = run_pipeline(spark, sf_dir, str(tmp_path / "pipe"), context_ttl=context)
+    typed = triples.filter(F.col("o") == "<http://example.org/transcripts/ConversationWithTurns>")
+    edges = pg_edges(transcripts_df(spark, sf_dir)).filter(F.col("label") == "IN")
+    # several IN edges share a destination, so a missing dedup would show
+    assert edges.count() > edges.select("dst_id").distinct().count()
+    assert typed.count() == edges.select("dst_id").distinct().count()
+    assert triples.count() == triples.distinct().count()
 
 
 def test_observation_fires_without_templates(spark, sf_dir):

@@ -24,13 +24,11 @@ spark = build_session(
     },
 )
 
-from prec_spark.entry_queries import _kg_instance_graph, _kg_undc, _kg_cached
-from prec_spark.plans.components import cc_graph, instance_edges
+from prec_spark.entry_queries import _kg_instance_graph, _kg_und, _kg_undc
 from prec_spark.plans.node2vec import (
     node2vec_walks, STEPS, SAMPLE_MOD, W_RETURN, W_COMMON, W_FAR,
 )
 from prec_spark.plans.walks import NBR_CAP, _md5_int, random_walks
-from prec_spark.cached import shared_cached_df
 
 
 def t(name, mk, reps=3):
@@ -46,11 +44,7 @@ def t(name, mk, reps=3):
     return best
 
 
-und = shared_cached_df(
-    spark,
-    f"kg_cc_und:{sf_dir}",
-    lambda: cc_graph(instance_edges(_kg_cached(spark, sf_dir)))[0],
-)
+und = _kg_und(spark, sf_dir)
 ids, iund, _sl = _kg_instance_graph(spark, sf_dir)
 undc = _kg_undc(spark, sf_dir, und)
 print("nodes:", ids.count(), "und:", und.count(), "undc:", undc.count(),

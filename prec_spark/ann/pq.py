@@ -218,11 +218,11 @@ def _pq_parts(
         books = pq_codebooks(spark, vecs, dim)
         codes, qdf = build_codes(), build_qdf()
     else:
-        from ..cached import shared_checkpointed_df
+        from ..cached import shared_frame
 
         books = pq_codebooks(spark, vecs, dim, cache_key=sf_dir)
-        codes = shared_checkpointed_df(spark, f"pq_codes:{sf_dir}", build_codes)
-        qdf = shared_checkpointed_df(spark, f"pq_qtabs:{sf_dir}", build_qdf)
+        codes = shared_frame(spark, f"pq_codes:{sf_dir}", build_codes)
+        qdf = shared_frame(spark, f"pq_qtabs:{sf_dir}", build_qdf)
     return vecs, dim, books, codes, qdf
 
 
@@ -279,14 +279,14 @@ def ann_ivfpq(
         cents = train_kmeans(spark, vecs, _k_cells(vecs.count()))
         cells = _assign(vecs, cents).select("vec_id", "cell")
     else:
-        from ..cached import shared_checkpointed_df
+        from ..cached import shared_frame
 
-        cents = shared_checkpointed_df(
+        cents = shared_frame(
             spark, f"ivf_centroids:{sf_dir}",
             lambda: train_kmeans(spark, vecs, _k_cells(vecs.count())),
         )
         # the inverted file: (vec_id, cell), built once per session
-        cells = shared_checkpointed_df(
+        cells = shared_frame(
             spark, f"ivf_cells:{sf_dir}",
             lambda: _assign(vecs, cents).select("vec_id", "cell"),
         )

@@ -207,9 +207,9 @@ def ann_ivf(
     if centroids is not None:
         cents = centroids
     elif vectors is None:
-        from ..cached import shared_checkpointed_df
+        from ..cached import shared_frame
 
-        cents = shared_checkpointed_df(
+        cents = shared_frame(
             spark, f"ivf_centroids:{sf_dir}",
             lambda: train_kmeans(spark, vecs, _k_cells(vecs.count())),
         )
@@ -437,9 +437,9 @@ def ann_lsh(
         # the 128 interpreted hyperplane dots per vector are the
         # expensive part — hash the corpus once per session ("build the
         # LSH index once"), like the IVF centroids
-        from ..cached import shared_checkpointed_df
+        from ..cached import shared_frame
 
-        buckets = shared_checkpointed_df(
+        buckets = shared_frame(
             spark, f"lsh_buckets:{sf_dir}",
             lambda: lsh_bucket_keys(vecs, dim),
         )

@@ -1,112 +1,141 @@
-"""Session-scoped shared input caches.
+"""The session-shared frame registry.
 
-Query entry points take (spark, sf_dir) and are invoked repeatedly in
-one session (driver oracle gate: 33 queries; bench: cold + N warm reps
-each). A bare ``transcripts_df(...).cache()`` inside the entry point
-creates a FRESH cached DataFrame per call that nothing ever
-unpersists: 3 bench reps of the PREC-0 query alone leaked 9 cached
-inputs, and the accumulated storage (MEMORY_AND_DISK spills land in
-the tmpfs spark.local.dir — i.e. back in RAM) degraded later queries
-by 3-4x (round-5 profiling: prec0_triples rep 17s/12s/43s).
+Entry points run many times in one session (oracle gate, bench reps);
+a bare ``.cache()`` inside one leaks a cached frame per call (round 5:
+3 reps of prec0_triples leaked 9, and later queries ran 3-4x slower).
+``shared_frame`` memoizes ONE materialized frame per (application, key).
 
-``shared_cached_df`` memoizes the cached DataFrame per (application,
-key): every call reuses the ONE cache entry, exactly like a real
-long-lived session that caches its inputs once. If the cache was
-dropped externally (``spark.catalog.clearCache()`` between oracle-gate
-queries), the entry is re-marked for caching on next use; if the
-session changed, the registry resets.
+A frame whose build reads another cached or checkpointed frame is built
+on an eager ``localCheckpoint`` leaf, so no consumer plan nests another
+frame's build (Spark walks and prints the whole nested plan on every SQL
+execution and AQE update: 1.30 MB for the pagerank edge frame before the
+cut, 1 KB after).  A build over sources only (transcripts, shingles)
+nests nothing and is cached directly.  Storage modes:
+
+* **checkpoint** (default): the checkpoint itself, scanned as rows with
+  no columnar decode (25-30% faster on the walk corpora at sf0.1), for
+  frames with no partitioning contract.
+* **columnar** (``columnar=True``): ``.cache()`` over the cut, for
+  frames read through narrow projections (checkpoint scans lose column
+  pruning).
+* **partitioned** (``partition_by=cols``): ``.repartition(n, *cols)
+  .cache()`` over the cut, ``n`` = ``spark.sql.shuffle.partitions``; a
+  consumer keyed on ``cols`` plans no exchange.  The cut sits BELOW the
+  repartition because under AQE a checkpoint reports
+  ``UnknownPartitioning`` and the consumers would re-shuffle.
+
+A columnar frame over a cut keeps the checkpoint under its cache (about
+twice the storage): ``spark.catalog.clearCache()`` drops only the cache,
+and the next call re-caches it.  Checkpoint blocks live at
+MEMORY_AND_DISK with no replica, so a lost executor loses them.  In
+local mode the only executor is the driver, so that ends the session
+anyway; a cluster deployment needs a replicated cache or a reliable
+``checkpoint()`` instead.  Each build and reuse is logged at INFO on
+``prec_spark.cached`` with its wall time and row count.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+import logging
+import time
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
-_REG: dict[tuple[str, str], DataFrame] = {}
+_log = logging.getLogger(__name__)
 
 
-def shared_cached_df(
-    spark: SparkSession, key: str, build: Callable[[], DataFrame]
+@dataclass
+class _Shared:
+    df: DataFrame
+    rows: int
+    columnar: bool
+
+
+_REG: dict[tuple[str, str], _Shared] = {}
+
+
+def shared_frame(
+    spark: SparkSession,
+    key: str,
+    build: Callable[[], DataFrame],
+    partition_by: Sequence[str] = (),
+    columnar: bool = False,
 ) -> DataFrame:
-    """Return ``build()`` cached, memoized per (session, key)."""
+    """Return ``build()`` materialized in the storage mode the module
+    docstring describes, memoized per (application, key), with its row
+    count kept for ``shared_rows``."""
     app = spark.sparkContext.applicationId
-    k = (app, key)
-    df = _REG.get(k)
-    if df is None:
-        if any(a != app for (a, _) in _REG):
-            _REG.clear()  # previous session's entries are dead plans
-        df = build().cache()
-        _REG[k] = df
-    elif not df.storageLevel.useMemory:
-        # spark.catalog.clearCache() dropped it (oracle-gate hygiene):
-        # re-mark so the next action re-populates the single entry
-        df = df.cache()
-        _REG[k] = df
-    return df
+    for k in [k for k in _REG if k[0] != app]:
+        del _REG[k]  # a stopped session's frames are dead plans
+    t0 = time.perf_counter()
+    entry = _REG.get((app, key))
+    event = "reused"
+    if entry is None:
+        df, rows = build(), -1
+        columnar = columnar or bool(partition_by)
+        if not columnar or _reads_materialized(df):
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
+            rows = obs.get["rows"]
+        if partition_by:
+            parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            df = df.repartition(parts, *partition_by)
+        entry = _REG[(app, key)] = _Shared(df, rows, columnar)
+        event = "built"
+    if entry.columnar and not entry.df.storageLevel.useMemory:
+        # first build, or spark.catalog.clearCache() dropped the cache:
+        # (re)populate it
+        entry.rows = entry.df.cache().count()
+        if event == "reused":
+            event = "re-cached"
+    _log.info(
+        "shared_frame %s: %s, %d rows, %.3f s",
+        key, event, entry.rows, time.perf_counter() - t0,
+    )
+    return entry.df
 
 
-_REG_CK: dict[tuple[str, str], DataFrame] = {}
+def _reads_materialized(df: DataFrame) -> bool:
+    """True when ``df``'s plan reads a cached or checkpointed frame."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return any(
+        leaves.apply(i).nodeName() in ("InMemoryRelation", "LogicalRDD")
+        for i in range(leaves.size())
+    )
+
+
+def shared_rows(spark: SparkSession, key: str) -> int:
+    """Row count of the shared frame ``key``, recorded at build time
+    (no Spark job); the frame must have been built in this session."""
+    return _REG[(spark.sparkContext.applicationId, key)].rows
 
 
 def release_shared() -> None:
-    """Drop the shared-frame memos so their storage can be reclaimed.
-
-    For gate-style harnesses that run MANY queries through one
-    small-heap session and free storage between them: ``clearCache()``
-    drops the columnar-cached frames (shared_cached_df re-marks them on
-    next use), but localCheckpoint blocks are pinned by the _REG_CK
-    references and would accumulate for the whole session.  Dropping
-    the registries makes those blocks unreferenced, so the caller's
-    driver GC releases them via the ContextCleaner; the next consumer
-    rebuilds through the memo-miss path — the same
-    drop-and-rebuild-on-demand lifecycle the cached frames already
-    have.  The bench and production sessions never call this: their
-    shared frames stay resident by design."""
+    """Drop every shared frame and unpersist its cache, for gate-style
+    harnesses that free storage between queries; the checkpoint blocks
+    go at the caller's next driver GC (ContextCleaner), and the next
+    consumer rebuilds.  Bench and production sessions never call this."""
+    for entry in _REG.values():
+        if entry.columnar:
+            entry.df.unpersist(blocking=True)
     _REG.clear()
-    _REG_CK.clear()
-
-
-def shared_checkpointed_df(
-    spark: SparkSession, key: str, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """Return ``build().localCheckpoint()``, memoized per (session, key).
-
-    The checkpoint sibling of ``shared_cached_df``, for shared frames
-    that downstream loops SCAN repeatedly WITHOUT relying on a cached
-    partitioning contract: checkpoint blocks read back as rows, with no
-    per-scan columnar decode (measured 25-30% on the walk corpora at
-    sf0.1), and match the eager materialization the walk operators
-    already use for their own intermediates.  NOT for the
-    hash-partitioned round frames (iund/iund_sl/edsl/wund_sl, the
-    s-partitioned KG cache): under AQE a localCheckpoint surfaces as a
-    LogicalRDD with UNKNOWN partitioning, so the exchange-elision those
-    frames were cached for would be lost and every consumer would
-    re-shuffle — verified by plan inspection, see OPTIMIZATION_r06.md.
-    Blocks live at MEMORY_AND_DISK until the session (or the memoized
-    reference) goes away; ``spark.catalog.clearCache()`` does not drop
-    them, which is exactly right for a session-scoped shared input."""
-    app = spark.sparkContext.applicationId
-    k = (app, key)
-    df = _REG_CK.get(k)
-    if df is None:
-        if any(a != app for (a, _) in _REG_CK):
-            _REG_CK.clear()  # previous session's entries are dead plans
-        df = build().localCheckpoint()
-        _REG_CK[k] = df
-    return df
 
 
 def cached_transcripts_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The transcripts PG input cached once per session, augmented with
     ``next_idx`` (the NEXT-edge lead) computed once at cache build so
-    the PG edge projection needs no per-call window.
+    the PG edge projection needs no per-call window.  The cache keeps
+    the window's ``conv_id`` partitioning, so the PG projections, the
+    mention grouping and the conversation windows downstream plan no
+    exchange.
 
     ONLY valid for the full, unfiltered table: a caller that filters
     turns (kg_asof) must NOT reuse the precomputed lead — consecutive
     surviving turns differ — so such callers pass the plain frame and
     pg_edges falls back to its window."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from .transcripts import transcripts_df
@@ -117,7 +146,7 @@ def cached_transcripts_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
             "next_idx", F.lead("turn_idx").over(w)
         )
 
-    return shared_cached_df(spark, f"transcripts:{sf_dir}", build)
+    return shared_frame(spark, f"transcripts:{sf_dir}", build, columnar=True)
 
 
 def cached_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

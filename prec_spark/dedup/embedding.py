@@ -52,9 +52,9 @@ def cached_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared front of embedding_neardup and all three ANN variants
     (before round 5 each call re-derived and some re-CACHED it,
     leaking an entry per bench rep)."""
-    from ..cached import shared_checkpointed_df
+    from ..cached import shared_frame
 
-    return shared_checkpointed_df(
+    return shared_frame(
         spark, f"vectors:{sf_dir}", lambda: _vectors(spark, sf_dir)
     )
 

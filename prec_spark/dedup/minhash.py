@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cached import shared_cached_df
+from ..cached import shared_frame
 from .common import SHINGLES_CTE, doc_shingles
 
 N_PERMS = 8
@@ -42,9 +42,9 @@ def dedup_minhash_pairs(
     ex = (
         shingles.cache()
         if shingles is not None
-        else shared_cached_df(
+        else shared_frame(
             spark, f"doc_shingles:{sf_dir}",
-            lambda: doc_shingles(spark, sf_dir),
+            lambda: doc_shingles(spark, sf_dir), columnar=True,
         )
     )
     mh = _minhashes(ex)

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cached import shared_cached_df
+from ..cached import shared_frame
 from .common import SHINGLES_CTE, doc_shingles
 
 THRESHOLD = 0.3
@@ -20,8 +20,9 @@ THRESHOLD = 0.3
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) — all pairs with Jaccard >= 0.3."""
-    ex = shared_cached_df(
-        spark, f"doc_shingles:{sf_dir}", lambda: doc_shingles(spark, sf_dir)
+    ex = shared_frame(
+        spark, f"doc_shingles:{sf_dir}", lambda: doc_shingles(spark, sf_dir),
+        columnar=True,
     )
     sizes = ex.groupBy("doc_id").count().withColumnRenamed("count", "n")
     common = (

@@ -352,15 +352,15 @@ def cached_simhash_graph(spark: SparkSession, sf_dir: str):
     self-join + Hamming verify) is paid once per session and shared by
     the hamming and CC variants, like the IVF centroid / LSH bucket
     caches."""
-    from ..cached import shared_checkpointed_df
+    from ..cached import shared_frame
 
     fp = cached_doc_fingerprint(spark, sf_dir).select("doc_id", "simhash64")
-    reps = shared_checkpointed_df(
+    reps = shared_frame(
         spark,
         f"simhash_reps:{sf_dir}",
         lambda: fp.groupBy("simhash64").agg(F.min("doc_id").alias("rep_doc")),
     )
-    verified = shared_checkpointed_df(
+    verified = shared_frame(
         spark,
         f"simhash_verified:{sf_dir}",
         lambda: band_candidates(reps).filter(

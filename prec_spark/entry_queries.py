@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from .cached import (
     cached_transcripts,
     cached_transcripts_aug,
-    shared_cached_df,
-    shared_checkpointed_df,
+    shared_frame,
+    shared_rows,
 )
 from .flagship import EX, flagship_oracle_sql, flagship_triples
 from .pg.export import cypher_create_statements, gremlin_insert_statements
@@ -695,13 +695,11 @@ def _prec0_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Session-scoped shared caches: repeated invocations (bench warm
     # reps, oracle gate) reuse ONE entry instead of leaking a fresh
     # cache pair per call.
-    from .cached import shared_checkpointed_df
-
-    nodes = shared_checkpointed_df(
+    nodes = shared_frame(
         spark, f"pg_nodes:{sf_dir}",
         lambda: pg_nodes(cached_transcripts(spark, sf_dir)),
     )
-    edges = shared_checkpointed_df(
+    edges = shared_frame(
         spark, f"pg_edges:{sf_dir}",
         lambda: pg_edges(cached_transcripts_aug(spark, sf_dir)),
     )
@@ -851,11 +849,17 @@ def _kg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds (instance edges, resource edges) read the same cache, so a
     session materializes the KG construction once, not once per
     family."""
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return shared_cached_df(
-        spark,
-        f"kg_triples:{sf_dir}",
-        lambda: _kg_triples(spark, sf_dir).repartition(parts, "s"),
+    return shared_frame(
+        spark, f"kg_triples:{sf_dir}", lambda: _kg_triples(spark, sf_dir),
+        partition_by=("s",),
+    )
+
+
+def _kg_pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-cached resource-edge list of the pagerank/ppr graph."""
+    return shared_frame(
+        spark, f"kg_pr_edges:{sf_dir}",
+        lambda: resource_edges(_kg_cached(spark, sf_dir)), columnar=True,
     )
 
 
@@ -864,18 +868,15 @@ def _kg_pr_graph(spark: SparkSession, sf_dir: str):
     n_nodes) — the dense id mapping with PPR's seed flag and the
     self-row-augmented idst-partitioned in-edge frame every iteration
     re-reads (plans/pagerank.py pagerank_edges_sl)."""
-    edges = shared_cached_df(
-        spark,
-        f"kg_pr_edges:{sf_dir}",
-        lambda: resource_edges(_kg_cached(spark, sf_dir)),
+    edges = _kg_pr_edges(spark, sf_dir)
+    ids = shared_frame(
+        spark, f"kg_pr_ids:{sf_dir}", lambda: pagerank_ids(edges), columnar=True
     )
-    ids = shared_cached_df(
-        spark, f"kg_pr_ids:{sf_dir}", lambda: pagerank_ids(edges)
+    edsl = shared_frame(
+        spark, f"kg_pr_edsl:{sf_dir}", lambda: pagerank_edges_sl(ids, edges),
+        partition_by=("idst",),
     )
-    edsl = shared_cached_df(
-        spark, f"kg_pr_edsl:{sf_dir}", lambda: pagerank_edges_sl(ids, edges)
-    )
-    return ids, edsl, ids.count()
+    return ids, edsl, shared_rows(spark, f"kg_pr_ids:{sf_dir}")
 
 
 def _kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -888,12 +889,7 @@ def _kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, edsl, n = _kg_pr_graph(spark, sf_dir)
     if fits_broadcast(spark, n):
         return pagerank_iterate_ids(ids, edsl)
-    edges = shared_cached_df(
-        spark,
-        f"kg_pr_edges:{sf_dir}",
-        lambda: resource_edges(_kg_cached(spark, sf_dir)),
-    )
-    ed, nodes = pagerank_graph(edges)
+    ed, nodes = pagerank_graph(_kg_pr_edges(spark, sf_dir))
     return pagerank_iterate(ed, nodes)
 
 
@@ -904,25 +900,29 @@ def _kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, edsl, n = _kg_pr_graph(spark, sf_dir)
     if fits_broadcast(spark, n):
         return ppr_iterate_ids(ids, edsl)
-    edges = shared_cached_df(
-        spark,
-        f"kg_pr_edges:{sf_dir}",
-        lambda: resource_edges(_kg_cached(spark, sf_dir)),
-    )
-    ed, nodes = pagerank_graph(edges)
+    ed, nodes = pagerank_graph(_kg_pr_edges(spark, sf_dir))
     return ppr_iterate(ed, nodes)
+
+
+def _kg_und(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-shared symmetric instance edge list (src, dst).
+
+    Checkpoint-held, not columnar-cached: it carries no partitioning
+    contract (its (src, dst)-distinct layout satisfies no consumer's
+    clustering), and keeping the big string frame out of the columnar
+    cache pool measured 15-45% on every instance-graph query in
+    clean-session A/B (OPTIMIZATION_r06.md §15)."""
+    return shared_frame(
+        spark, f"kg_cc_und:{sf_dir}",
+        lambda: cc_graph(instance_edges(_kg_cached(spark, sf_dir)))[0],
+    )
 
 
 def _kg_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed degree histogram of the instance graph (see
     plans/degree.py; exact bit-length buckets, no floating log2) over
     the session-cached symmetric edge list."""
-    und = shared_checkpointed_df(
-        spark,
-        f"kg_cc_und:{sf_dir}",
-        lambda: cc_graph(instance_edges(_kg_cached(spark, sf_dir)))[0],
-    )
-    return degree_histogram(und)
+    return degree_histogram(_kg_und(spark, sf_dir))
 
 
 def _kg_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -940,46 +940,29 @@ def _kg_instance_graph(spark: SparkSession, sf_dir: str):
     is the self-loop-augmented, idst-partitioned round frame that makes
     each propagation round one shuffle-free stage (plans/components.py
     selfloop_edges)."""
-    # und is checkpoint-held, not columnar-cached: it carries no
-    # partitioning contract (its (src, dst)-distinct layout satisfies
-    # no consumer's clustering), and keeping the big string frame out
-    # of the columnar cache pool measured 15-45% on every
-    # instance-graph query in clean-session A/B (see cached.py
-    # shared_checkpointed_df and OPTIMIZATION_r06.md §15).  The
-    # hash-partitioned frames below STAY cached — a localCheckpoint
-    # would surface with unknown partitioning and re-add their
-    # exchanges.
-    und = shared_checkpointed_df(
-        spark,
-        f"kg_cc_und:{sf_dir}",
-        lambda: cc_graph(instance_edges(_kg_cached(spark, sf_dir)))[0],
-    )
-    ids = shared_cached_df(
-        spark,
-        f"kg_cc_ids:{sf_dir}",
+    und = _kg_und(spark, sf_dir)
+    ids = shared_frame(
+        spark, f"kg_cc_ids:{sf_dir}",
         lambda: cc_encode(und, und.select(F.col("src").alias("node")).distinct())[0],
+        columnar=True,
     )
-    # hash-partitioned by isrc: the degree aggregations and adjacency
+    # partitioned by isrc: the degree aggregations and adjacency
     # groupings of kg_kcore / kg_triangles / kg_linkpred all key on
-    # isrc, so caching the frame in that layout removes their
-    # per-query exchange outright (guide §2.4 — operations keyed the
-    # same way share one exchange, paid once at cache build).
-    iund = shared_cached_df(
-        spark,
-        f"kg_cc_iund:{sf_dir}",
+    # isrc, so this layout removes their per-query exchange outright
+    # (guide §2.4 — operations keyed the same way share one exchange,
+    # paid once at build)
+    iund = shared_frame(
+        spark, f"kg_cc_iund:{sf_dir}",
         lambda: und.join(
             ids.select(F.col("node").alias("src"), F.col("nid").alias("isrc")), "src"
         )
         .join(ids.select(F.col("node").alias("dst"), F.col("nid").alias("idst")), "dst")
-        .select("isrc", "idst")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "isrc"
-        ),
+        .select("isrc", "idst"),
+        partition_by=("isrc",),
     )
-    iund_sl = shared_cached_df(
-        spark,
-        f"kg_cc_iund_sl:{sf_dir}",
-        lambda: selfloop_edges(ids, iund),
+    iund_sl = shared_frame(
+        spark, f"kg_cc_iund_sl:{sf_dir}", lambda: selfloop_edges(ids, iund),
+        partition_by=("idst",),
     )
     return ids, iund, iund_sl
 
@@ -1167,18 +1150,15 @@ def _kg_wsp(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights); shares BOTH the session-cached symmetric edge list and
     the integer id encoding with kg_components/kg_bfs, so rounds
     shuffle dense integers, not bnode strings."""
-    und = shared_checkpointed_df(
-        spark,
-        f"kg_cc_und:{sf_dir}",
-        lambda: cc_graph(instance_edges(_kg_cached(spark, sf_dir)))[0],
-    )
+    und = _kg_und(spark, sf_dir)
     ids, _iund, _iund_sl = _kg_instance_graph(spark, sf_dir)
-    wund_sl = shared_cached_df(
-        spark,
-        f"kg_wsp_wund_sl:{sf_dir}",
-        lambda: wsp_weighted_edges(ids, und),
+    wund_sl = shared_frame(
+        spark, f"kg_wsp_wund_sl:{sf_dir}", lambda: wsp_weighted_edges(ids, und),
+        partition_by=("idst",),
     )
-    return wsp_ids(ids, und, wund_sl=wund_sl)
+    return wsp_ids(
+        ids, und, wund_sl=wund_sl, n_nodes=shared_rows(spark, f"kg_cc_ids:{sf_dir}")
+    )
 
 
 def _kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1205,7 +1185,9 @@ def _kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure.  The integer-encoded graph (the frames every round
     re-reads) is session-cached, so warm calls pay only the rounds."""
     ids, iund, iund_sl = _kg_instance_graph(spark, sf_dir)
-    return cc_iterate_ids(ids, iund, iund_sl=iund_sl)
+    return cc_iterate_ids(
+        ids, iund, iund_sl=iund_sl, n_nodes=shared_rows(spark, f"kg_cc_ids:{sf_dir}")
+    )
 
 
 def _kg_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,7 +1195,9 @@ def _kg_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest entity node (see plans/bfs.py); shares the session-cached
     integer graph with kg_components."""
     ids, iund, iund_sl = _kg_instance_graph(spark, sf_dir)
-    return bfs_ids(ids, iund, iund_sl=iund_sl)
+    return bfs_ids(
+        ids, iund, iund_sl=iund_sl, n_nodes=shared_rows(spark, f"kg_cc_ids:{sf_dir}")
+    )
 
 
 def _kg_path_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1256,11 +1240,7 @@ def _kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DeepWalk-style hash-seeded deterministic random-walk corpus
     over the KG instance graph (see plans/walks.py); shares the
     session-cached symmetric edge list with kg_components."""
-    und = shared_checkpointed_df(
-        spark,
-        f"kg_cc_und:{sf_dir}",
-        lambda: cc_graph(instance_edges(_kg_cached(spark, sf_dir)))[0],
-    )
+    und = _kg_und(spark, sf_dir)
     return random_walks(und, undc=_kg_undc(spark, sf_dir, und))
 
 
@@ -1274,20 +1254,14 @@ def _kg_undc(spark: SparkSession, sf_dir: str, und: DataFrame) -> DataFrame:
     (clean-session A/B/A/B; see OPTIMIZATION_r06.md).  This matches the
     eager localCheckpoint the operators themselves build when no shared
     view is passed."""
-    return shared_checkpointed_df(
-        spark, f"kg_undc:{sf_dir}", lambda: capped_adjacency(und)
-    )
+    return shared_frame(spark, f"kg_undc:{sf_dir}", lambda: capped_adjacency(und))
 
 
 def _kg_node2vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-order (p, q)-biased walk corpus over the KG instance
     graph (see plans/node2vec.py); shares the session-cached symmetric
     edge list with kg_components / kg_random_walks."""
-    und = shared_checkpointed_df(
-        spark,
-        f"kg_cc_und:{sf_dir}",
-        lambda: cc_graph(instance_edges(_kg_cached(spark, sf_dir)))[0],
-    )
+    und = _kg_und(spark, sf_dir)
     return node2vec_walks(und, undc=_kg_undc(spark, sf_dir, und))
 
 

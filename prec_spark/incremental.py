@@ -284,10 +284,10 @@ def kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The snapshot-1 store is session-cached: in production it is a
     MATERIALIZED table the maintenance job reads, not something it
     recomputes — only the first call pays its construction."""
-    from .cached import shared_checkpointed_df
+    from .cached import shared_frame
 
     tbl = IceLiteTable(spark, _inc_table_root(spark, sf_dir))
-    store = shared_checkpointed_df(
+    store = shared_frame(
         spark,
         f"kg_inc_store:{sf_dir}",
         lambda: kg_triples_prov(spark, sf_dir, tbl.read(snapshot_id=1)),

@@ -53,7 +53,7 @@ def bfs_ids(
     ``idst`` IS ``min(d(v), 1 + min over neighbors)`` with no left-join
     back; at cluster scale the co-partitioned shuffle formulation is
     kept unchanged."""
-    from .components import fits_broadcast, selfloop_edges
+    from .components import checkpoint_observed, fits_broadcast, selfloop_edges
 
     dist = ids.select(
         F.col("nid").alias("node"),
@@ -79,30 +79,24 @@ def bfs_ids(
                 iund_sl.join(b, iund_sl["isrc"] == F.col("n1"))
                 .groupBy(F.col("idst").alias("node"))
                 .agg(F.min(F.col("d1") + F.col("w")).alias("dist"))
-            ).localCheckpoint(eager=False)
+            )
         else:
             mn = (
                 iund.join(dist, iund["isrc"] == dist["node"])
                 .groupBy(F.col("idst").alias("node"))
                 .agg(F.min("dist").alias("mn"))
             )
-            # lineage truncated every round — the frame is referenced
-            # on two sides per round, same 4^k recompute hazard as
-            # components
-            dist = (
-                dist.join(mn, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        "dist", F.coalesce(F.col("mn") + 1, F.lit(INF))
-                    ).alias("dist"),
-                )
-                .localCheckpoint()
+            dist = dist.join(mn, "node", "left").select(
+                "node",
+                F.least("dist", F.coalesce(F.col("mn") + 1, F.lit(INF))).alias("dist"),
             )
-        mass = dist.agg(F.sum("dist")).collect()[0][0]
-        if mass == prev_mass:
+        # lineage truncated every round — the frame is referenced on two
+        # sides per round, same 4^k recompute hazard as components — with
+        # the distance mass observed in the same execution
+        dist, probe = checkpoint_observed(dist, mass=F.sum("dist"))
+        if probe["mass"] == prev_mass:
             break  # exact: distances only decrease, equal sums = no-op
-        prev_mass = mass
+        prev_mass = probe["mass"]
     return (
         dist.join(
             ids.select(F.col("nid").alias("node"), F.col("node").alias("node_s")),

@@ -47,7 +47,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..session import _mem_bytes
@@ -170,28 +170,35 @@ def fits_broadcast(spark, n_rows: int) -> bool:
 
 def selfloop_edges(ids: DataFrame, iund: DataFrame) -> DataFrame:
     """(isrc, idst, w): the integer edge list plus a zero-weight
-    self-loop per node, hash-partitioned by ``idst``.
+    self-loop per node.
 
-    This single shared frame makes every propagation round of
-    components AND BFS one shuffle-free stage when the node frame
-    broadcasts: the self-loop row carries each node's own label/distance
-    into the same ``groupBy(idst)`` aggregation (no left-join back, no
-    union), and because the frame is partitioned by ``idst`` the
-    aggregation after a broadcast join needs no exchange at all.
-    Callers should cache or checkpoint it — it is read every round."""
-    spark = iund.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        iund.select("isrc", "idst", F.lit(1).cast("long").alias("w"))
-        .unionAll(
-            ids.select(
-                F.col("nid").alias("isrc"),
-                F.col("nid").alias("idst"),
-                F.lit(0).cast("long").alias("w"),
-            )
+    Partitioned by ``idst`` (the entry points share it through
+    ``shared_frame(..., partition_by=("idst",))``), this single frame
+    makes every propagation round of components AND BFS one
+    shuffle-free stage when the node frame broadcasts: the self-loop
+    row carries each node's own label/distance into the same
+    ``groupBy(idst)`` aggregation (no left-join back, no union), and the
+    aggregation after a broadcast join needs no exchange at all.  It is
+    read every round, so callers materialize it."""
+    return iund.select("isrc", "idst", F.lit(1).cast("long").alias("w")).unionAll(
+        ids.select(
+            F.col("nid").alias("isrc"),
+            F.col("nid").alias("idst"),
+            F.lit(0).cast("long").alias("w"),
         )
-        .repartition(parts, "idst")
     )
+
+
+def checkpoint_observed(df: DataFrame, **aggs: F.Column) -> tuple[DataFrame, dict]:
+    """``df`` eagerly localCheckpointed, and the aggregates ``aggs``
+    (name -> aggregate column) observed while it was written: a round
+    and its convergence probe in ONE SQL execution instead of a
+    checkpoint plus a separate ``collect()``.  The observation sits on
+    top of the plan, in the result stage, so a retried shuffle stage
+    cannot count twice."""
+    obs = Observation()
+    ck = df.observe(obs, *[c.alias(n) for n, c in aggs.items()]).localCheckpoint()
+    return ck, obs.get
 
 
 def cc_iterate_ids(
@@ -243,7 +250,7 @@ def cc_iterate_ids(
         n_nodes = ids.count()
     spark = ids.sparkSession
     fast = fits_broadcast(spark, n_nodes)
-    prev_mass = None if check_convergence else 0
+    prev_mass = None
     converged = not check_convergence
     for _ in range(rounds):
         if fast:
@@ -258,7 +265,7 @@ def cc_iterate_ids(
                 .join(b2, F.col("l1") == F.col("n2"))
                 .groupBy(F.col("idst").alias("node"))
                 .agg(F.min("l2").alias("lab"))
-            ).localCheckpoint(eager=not check_convergence)
+            )
         else:
             nm = _neighbor_min(iund, lab)
             # pointer jump: follow the label to ITS label.  Every label
@@ -267,24 +274,22 @@ def cc_iterate_ids(
             jump = nm.select(
                 F.col("node").alias("jnode"), F.col("lab").alias("jlab")
             )
-            lab = (
-                nm.join(jump, nm["lab"] == jump["jnode"])
-                .select("node", F.col("jlab").alias("lab"))
-            ).localCheckpoint()
-        # truncate lineage EVERY round (localCheckpoint above): each
-        # round references the previous labels twice, so an
-        # un-checkpointed chain recomputes 4^k times and its physical
-        # plan grows just as fast — the labels frame is node-sized, so
-        # the checkpoint is cheap at any scale (use checkpoint() on a
-        # cluster-visible dir for executor-loss resilience).  On the
-        # fast path the checkpoint is lazy: the mass probe below
-        # materializes it in the same job.
+            lab = nm.join(jump, nm["lab"] == jump["jnode"]).select(
+                "node", F.col("jlab").alias("lab")
+            )
+        # truncate lineage EVERY round: each round references the
+        # previous labels twice, so an un-checkpointed chain recomputes
+        # 4^k times and its physical plan grows just as fast — the
+        # labels frame is node-sized, so the checkpoint is cheap at any
+        # scale (use checkpoint() on a cluster-visible dir for
+        # executor-loss resilience).  The label mass is observed while
+        # the checkpoint is written.
+        lab, probe = checkpoint_observed(lab, mass=F.sum("lab"))
         if check_convergence:
-            mass = lab.agg(F.sum("lab")).collect()[0][0]
-            if mass == prev_mass:
+            if probe["mass"] == prev_mass:
                 converged = True
                 break
-            prev_mass = mass
+            prev_mass = probe["mass"]
     if not converged:
         raise RuntimeError(
             f"cc_iterate: labels still changing after {rounds} rounds — "

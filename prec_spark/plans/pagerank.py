@@ -110,16 +110,15 @@ def pagerank_ids(
 def pagerank_edges_sl(ids: DataFrame, edges: DataFrame) -> DataFrame:
     """(isrc, idst, deg, sseed): the integer in-edge frame with
     out-degrees attached, augmented with one deg-NULL self row per
-    node and hash-partitioned by ``idst``.
+    node.
 
     The self row is what lets one ``groupBy(idst)`` sum produce the
     full next mass vector with no left-join back to the node set:
     its contribution is the per-node restart term (BASE for pagerank,
     seed-gated BASE for ppr via ``sseed``), while edge rows contribute
-    ``(mass * 85) div (100 * deg)``.  Callers should cache it — every
-    iteration re-reads it."""
-    spark = edges.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ``(mass * 85) div (100 * deg)``.  Callers cache it partitioned by
+    ``idst``, so that sum needs no exchange — every iteration re-reads
+    it."""
     s_ids = ids.select(F.col("node").alias("src"), F.col("nid").alias("isrc"))
     d_ids = ids.select(F.col("node").alias("dst"), F.col("nid").alias("idst"))
     ie = edges.join(s_ids, "src").join(d_ids, "dst").select("isrc", "idst")
@@ -135,7 +134,6 @@ def pagerank_edges_sl(ids: DataFrame, edges: DataFrame) -> DataFrame:
                 F.col("is_seed").alias("sseed"),
             )
         )
-        .repartition(parts, "idst")
     )
 
 

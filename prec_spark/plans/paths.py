@@ -49,11 +49,11 @@ def path_closure(edges: DataFrame, horizon: int = HORIZON) -> DataFrame:
     <= ``horizon`` edges; ``dist`` is the exact minimum hop count.
 
     ``edges`` is any (src, dst) relation (duplicates tolerated)."""
+    from .components import checkpoint_observed
+
     rounds = max(1, (horizon - 1).bit_length())  # ceil(log2 horizon)
-    # lazy checkpoints: lineage still truncated per round (the frame is
-    # referenced twice per round), but the fixpoint probe's collect
-    # materializes each checkpoint in the same job instead of paying a
-    # separate eager job per round
+    # lazy: the first round's eager checkpoint materializes it in the
+    # same job
     r = (
         edges.select("src", "dst", F.lit(1).cast("long").alias("dist"))
         .groupBy("src", "dst")
@@ -72,16 +72,17 @@ def path_closure(edges: DataFrame, horizon: int = HORIZON) -> DataFrame:
             )
             .filter(F.col("dist") <= horizon)
         )
-        r = (
-            r.unionAll(comp)
-            .groupBy("src", "dst")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)  # truncate lineage every round
+        # truncate lineage every round (the frame is referenced twice
+        # per round), observing the fixpoint probe in the same execution
+        r, probe = checkpoint_observed(
+            r.unionAll(comp).groupBy("src", "dst").agg(F.min("dist").alias("dist")),
+            pairs=F.count(F.lit(1)),
+            dist=F.sum("dist"),
         )
         # exact integer fixpoint: pairs only grow, min-dists only
         # shrink, so (count, sum dist) unchanged <=> the composition
         # step is idempotent and every further round is a no-op
-        cur = tuple(r.agg(F.count(F.lit(1)), F.sum("dist")).collect()[0])
+        cur = (probe["pairs"], probe["dist"])
         if cur == prev:
             break
         prev = cur

@@ -70,11 +70,9 @@ def wsp(und: DataFrame, rounds: int = ROUNDS) -> DataFrame:
 
 def wsp_weighted_edges(ids: DataFrame, und: DataFrame) -> DataFrame:
     """(isrc, idst, w): the integer edge list with hash weights from
-    the STRING endpoints, plus a zero-weight self-loop per node,
-    hash-partitioned by ``idst`` (the components/BFS self-loop frame
-    shape — callers should cache it, every round re-reads it)."""
-    spark = und.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    the STRING endpoints, plus a zero-weight self-loop per node (the
+    components/BFS self-loop frame shape — callers materialize it
+    partitioned by ``idst``, every round re-reads it)."""
     s_ids = ids.select(F.col("node").alias("src"), F.col("nid").alias("isrc"))
     d_ids = ids.select(F.col("node").alias("dst"), F.col("nid").alias("idst"))
     return (
@@ -89,7 +87,6 @@ def wsp_weighted_edges(ids: DataFrame, und: DataFrame) -> DataFrame:
                 F.lit(0).cast("long").alias("w"),
             )
         )
-        .repartition(parts, "idst")
     )
 
 
@@ -109,7 +106,7 @@ def wsp_ids(
     frame (the w=0 self-loop carries d(v), so the grouped min IS the
     full relaxation); at cluster scale the co-partitioned shuffle
     formulation is kept."""
-    from .components import fits_broadcast
+    from .components import checkpoint_observed, fits_broadcast
 
     if wund_sl is None:
         wund_sl = wsp_weighted_edges(ids, und).localCheckpoint()
@@ -133,29 +130,24 @@ def wsp_ids(
                 wund_sl.join(b, wund_sl["isrc"] == F.col("n1"))
                 .groupBy(F.col("idst").alias("node"))
                 .agg(F.min(F.col("d1") + F.col("w")).alias("dist"))
-            ).localCheckpoint(eager=False)
+            )
         else:
             mn = (
                 wund_sl.join(dist, wund_sl["isrc"] == dist["node"])
                 .groupBy(F.col("idst").alias("node"))
                 .agg(F.min(F.col("dist") + F.col("w")).alias("mn"))
             )
-            dist = (
-                dist.join(mn, "node", "left")
-                .select(
-                    "node",
-                    F.least("dist", F.coalesce(F.col("mn"), F.lit(INF)))
-                    .alias("dist"),
-                )
-                .localCheckpoint()  # truncate lineage every round
+            dist = dist.join(mn, "node", "left").select(
+                "node",
+                F.least("dist", F.coalesce(F.col("mn"), F.lit(INF))).alias("dist"),
             )
-        # exact early exit (distances only decrease; equal sums = no-op
-        # round) — skips the no-op tail without changing any value,
-        # same probe as bfs_ids
-        mass = dist.agg(F.sum("dist")).collect()[0][0]
-        if mass == prev_mass:
+        # truncate lineage every round; exact early exit (distances only
+        # decrease; equal sums = no-op round) — skips the no-op tail
+        # without changing any value, same probe as bfs_ids
+        dist, probe = checkpoint_observed(dist, mass=F.sum("dist"))
+        if probe["mass"] == prev_mass:
             break
-        prev_mass = mass
+        prev_mass = probe["mass"]
     return dist.join(ids, dist["node"] == ids["nid"]).select(
         ids["node"].alias("node"),
         F.when(F.col("dist") >= INF, F.lit(None).cast("long"))

@@ -162,9 +162,9 @@ def cached_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint shuffle is the shared front of every simhash dedup
     family — three entry-point queries recomputing it per call paid
     ~2 s each warm at sf0.1."""
-    from ..cached import shared_checkpointed_df
+    from ..cached import shared_frame
 
-    return shared_checkpointed_df(
+    return shared_frame(
         spark, f"doc_fingerprint:{sf_dir}",
         lambda: doc_fingerprint(spark, sf_dir),
     )

@@ -135,26 +135,23 @@ def kg_negative_samples_oracle_sql() -> str:
 def entity_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(e1, e2, c_xy, lift_x1000): conversation-level co-occurrence
     lift between entity surface forms (e1 < e2)."""
-    from .cached import shared_cached_df
+    from .cached import shared_frame
 
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    inc = shared_cached_df(
+    inc = shared_frame(
         spark,
         f"cooccur_inc:{sf_dir}",
         # the session-cached transcripts: the mention regexp then runs
         # over the materialized text column instead of re-deriving the
         # whole transcripts construction per call (measured 1.6 s vs
         # 0.4 s for the links subtree at sf0.1).  The incidence table
-        # is repartitioned by conv_id BEFORE the distinct, which makes
-        # the distinct, the conversation count, and the per-conversation
-        # adjacency grouping below all co-partitioned on conv_id — one
-        # exchange at cache build instead of one per consumer (the
-        # previous lazy checkpoint erased the partitioning, so every
-        # consumer re-shuffled)
+        # is cached partitioned by conv_id, which makes the
+        # conversation count and the per-conversation adjacency
+        # grouping below co-partitioned on conv_id — one exchange at
+        # build instead of one per consumer
         lambda: entity_links(spark, sf_dir, cached_transcripts(spark, sf_dir))
         .select("conv_id", "mention")
-        .repartition(parts, "conv_id")
         .distinct(),
+        partition_by=("conv_id",),
     )
     n_convs = inc.select("conv_id").distinct().count()
     cx = inc.groupBy("mention").agg(F.count(F.lit(1)).alias("c"))

@@ -47,6 +47,7 @@ from __future__ import annotations
 
 import logging
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -151,19 +152,20 @@ def broadcast_threshold(spark) -> int:
     return 0 if n >= 2**63 else n
 
 
-def fits_broadcast(spark, n_rows: int) -> bool:
-    """True when an ``n_rows`` node-sized (long, long) frame fits the
-    session's own broadcast threshold — the same size rule Spark's
+def fits_broadcast(spark, n_rows: int, row_bytes: int = _BCAST_ROW_BYTES) -> bool:
+    """True when an ``n_rows`` frame of ``row_bytes``-byte hashed rows
+    (default: node-sized (long, long) rows) fits the session's own
+    broadcast threshold — the same size rule Spark's
     planner applies, re-stated here because checkpointed frames carry
     no statistics for the planner to judge.  At cluster scale (10^9
     nodes) this is False and the iterate loops keep their co-partitioned
     shuffle formulation; locally it enables shuffle-free rounds.  The
     chosen path is logged."""
     thresh = broadcast_threshold(spark)
-    fast = 0 < n_rows * _BCAST_ROW_BYTES <= thresh
+    fast = 0 < n_rows * row_bytes <= thresh
     _log.info(
         "fits_broadcast: %d rows x %d B, threshold %d B -> %s path",
-        n_rows, _BCAST_ROW_BYTES, thresh, "broadcast" if fast else "shuffle",
+        n_rows, row_bytes, thresh, "broadcast" if fast else "shuffle",
     )
     return fast
 
@@ -189,15 +191,28 @@ def selfloop_edges(ids: DataFrame, iund: DataFrame) -> DataFrame:
     )
 
 
+#: storage of per-round checkpoints: memory and disk, serialized (in
+#: PySpark, ``MEMORY_AND_DISK`` is the serialized level)
+ROUND_STORAGE = StorageLevel.MEMORY_AND_DISK
+
+
 def checkpoint_observed(df: DataFrame, **aggs: F.Column) -> tuple[DataFrame, dict]:
     """``df`` eagerly localCheckpointed, and the aggregates ``aggs``
     (name -> aggregate column) observed while it was written: a round
     and its convergence probe in ONE SQL execution instead of a
     checkpoint plus a separate ``collect()``.  The observation sits on
     top of the plan, in the result stage, so a retried shuffle stage
-    cannot count twice."""
+    cannot count twice.
+
+    The blocks are stored serialized (``ROUND_STORAGE``): a round frame
+    is written once and read once or twice, and a deserialized store
+    re-estimates the size of its growing row buffer as it fills, which
+    took about 45% of the checkpoint tasks' samples in a profile of
+    warm kg_components / kg_path_star rounds."""
     obs = Observation()
-    ck = df.observe(obs, *[c.alias(n) for n, c in aggs.items()]).localCheckpoint()
+    ck = df.observe(obs, *[c.alias(n) for n, c in aggs.items()]).localCheckpoint(
+        storageLevel=ROUND_STORAGE
+    )
     return ck, obs.get
 
 
@@ -254,17 +269,16 @@ def cc_iterate_ids(
     converged = not check_convergence
     for _ in range(rounds):
         if fast:
-            b1 = F.broadcast(
-                lab.select(F.col("node").alias("n1"), F.col("lab").alias("l1"))
-            )
-            b2 = F.broadcast(
-                lab.select(F.col("node").alias("n2"), F.col("lab").alias("l2"))
-            )
+            # both lookups read ONE broadcast map: the explicit not-null
+            # filter is the one the second lookup's key would infer on
+            # the first side only, so the two sides plan identically
+            # and the planner reuses one broadcast exchange (one job)
+            m = F.broadcast(lab.filter(F.col("node").isNotNull() & F.col("lab").isNotNull()))
             lab = (
-                iund_sl.join(b1, iund_sl["isrc"] == F.col("n1"))
-                .join(b2, F.col("l1") == F.col("n2"))
+                iund_sl.join(m.alias("m1"), iund_sl["isrc"] == F.col("m1.node"))
+                .join(m.alias("m2"), F.col("m1.lab") == F.col("m2.node"))
                 .groupBy(F.col("idst").alias("node"))
-                .agg(F.min("l2").alias("lab"))
+                .agg(F.min("m2.lab").alias("lab"))
             )
         else:
             nm = _neighbor_min(iund, lab)

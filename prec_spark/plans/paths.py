@@ -23,7 +23,9 @@ the round-(k-1) relation with itself and taking the min covers it).
 ceil(log2 H) self-joins replace H edge joins — at H=16 that is 4
 shuffles instead of 16, and on a real cluster each round is one
 sort-merge self-join on a relation that is itself the output size,
-never edge-count x H.  Lineage is truncated every round
+never edge-count x H (locally, once a round's probe shows the relation
+under the broadcast threshold, the next self-join broadcasts one side
+instead).  Lineage is truncated every round
 (localCheckpoint; checkpoint() on a cluster for executor-loss
 resilience) and an exact integer fixpoint probe — (pair count,
 dist sum) unchanged means composition added nothing — exits early on
@@ -43,13 +45,17 @@ from pyspark.sql import functions as F
 
 HORIZON = 16
 
+#: estimated bytes per (long, long, long) row in a broadcast hash
+#: relation (24 B payload + the overhead components.py assumes)
+_PAIR_ROW_BYTES = 56
+
 
 def path_closure(edges: DataFrame, horizon: int = HORIZON) -> DataFrame:
     """(src, dst, dist) for every pair connected by a directed path of
     <= ``horizon`` edges; ``dist`` is the exact minimum hop count.
 
     ``edges`` is any (src, dst) relation (duplicates tolerated)."""
-    from .components import checkpoint_observed
+    from .components import ROUND_STORAGE, checkpoint_observed, fits_broadcast
 
     rounds = max(1, (horizon - 1).bit_length())  # ceil(log2 horizon)
     # lazy: the first round's eager checkpoint materializes it in the
@@ -58,11 +64,17 @@ def path_closure(edges: DataFrame, horizon: int = HORIZON) -> DataFrame:
         edges.select("src", "dst", F.lit(1).cast("long").alias("dist"))
         .groupBy("src", "dst")
         .agg(F.min("dist").alias("dist"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False, storageLevel=ROUND_STORAGE)
     )
     prev = None
     for _ in range(rounds):
         a, b = r.alias("a"), r.alias("b")
+        # once the previous round's probe has sized the relation, a
+        # right side under the broadcast threshold is broadcast: the
+        # round is then one exchange (the min aggregation) instead of
+        # three, whose stages AQE runs as separate jobs
+        if prev is not None and fits_broadcast(r.sparkSession, prev[0], _PAIR_ROW_BYTES):
+            b = F.broadcast(b)
         comp = (
             a.join(b, F.col("a.dst") == F.col("b.src"))
             .select(

@@ -66,6 +66,13 @@ def build_session(
       Python anywhere in the pipeline).
     * shuffle partitions default to 2x cores locally; on a real cluster
       the submitter sets this to ~2-3x total executor cores.
+    * a 1000-entry generated-code cache (Spark's default is 100):
+      kg_components, kg_pagerank and kg_path_star alone generate about
+      245 classes, so with the default every later pass of the three
+      evicts and recompiles 23-37 of them (which ones varies with the
+      eviction order), each a fresh class for the JIT to warm again;
+      with 1000 entries a warm pass compiles none.  Static: the first
+      session of a JVM fixes it.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -84,6 +91,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     driver_mem = (extra_conf or {}).get(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")

@@ -116,3 +116,24 @@ def compare(spark_df, oracle_sql: str, sf_dir: str):
         (a, b) for a, b in zip(spark_rows, duck_rows) if a != b
     ]
     assert not mismatches, f"first mismatches: {mismatches[:3]}"
+
+
+def final_plan(df) -> str:
+    """The executed (AQE final) physical plan of ``df`` after running it."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def spy_rounds(monkeypatch) -> list:
+    """Record every frame an iterate loop checkpoints, in round order."""
+    import prec_spark.plans.components as cc
+
+    rounds = []
+    observed = cc.checkpoint_observed
+
+    def spy(df, **aggs):
+        rounds.append(df)
+        return observed(df, **aggs)
+
+    monkeypatch.setattr(cc, "checkpoint_observed", spy)
+    return rounds

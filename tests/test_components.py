@@ -2,15 +2,23 @@
 union-find reference, oracle equivalence, loud non-convergence, and
 the partitioning invariance that justifies hash-gating it."""
 
+import re
+
 import duckdb
 import pytest
 
 from prec_spark.plans.components import (
     SCHEMA_PREDICATES,
+    cc_encode,
+    cc_graph,
+    cc_iterate_ids,
     components,
     components_oracle_sql,
     fits_broadcast,
+    instance_edges,
 )
+
+from .oracle_util import final_plan, spy_rounds
 
 # two real components: {a,b,c,d} (chain + reification wiring) and
 # {x,y}; schema predicates (rdf:type to a shared class hub) and
@@ -123,3 +131,21 @@ def test_fits_broadcast_parses_threshold(threshold, n_rows, fast, caplog):
         assert fits_broadcast(_Session(threshold), n_rows) is fast
     path = "broadcast" if fast else "shuffle"
     assert any(f"-> {path} path" in r.getMessage() for r in caplog.records)
+
+
+def test_fast_round_reads_one_label_broadcast(spark, tiny, monkeypatch):
+    """Both label lookups of a broadcast-path round read ONE broadcast
+    of the labels: the round plans one BroadcastExchange and reuses it
+    (one broadcast job per round, not two)."""
+    rounds = spy_rounds(monkeypatch)
+    und, nodes = cc_graph(instance_edges(tiny))
+    ids, iund = cc_encode(und, nodes)
+    got = {r["node"]: r["comp"] for r in cc_iterate_ids(ids, iund).collect()}
+    assert got == reference_components(TRIPLES)
+    # a later round: the first one's labels are the identity, whose
+    # two lookups plan alike anyway
+    assert len(rounds) > 1
+    plan = final_plan(rounds[-1])
+    # operator lines only: a ReusedExchange line also names its source
+    assert len(re.findall(r"^[\s:+-]*BroadcastExchange ", plan, re.M)) == 1, plan
+    assert "ReusedExchange" in plan, plan

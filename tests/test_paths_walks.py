@@ -13,7 +13,7 @@ from prec_spark.plans.paths import path_closure, path_star_oracle_sql
 from prec_spark.plans.walks import random_walks, walks_oracle_sql
 
 from .conftest import SF_DIR
-from .oracle_util import compare
+from .oracle_util import compare, final_plan, spy_rounds
 
 
 def _edges(spark, pairs):
@@ -31,6 +31,18 @@ def test_path_closure_chain(spark):
         (f"n{i}", f"n{j}"): j - i for i in range(6) for j in range(i + 1, 6)
     }
     assert got == want
+
+
+def test_path_closure_broadcasts_sized_rounds(spark, monkeypatch):
+    """Once the first round's probe has sized the relation, a round
+    under the broadcast threshold broadcasts one side of its self-join:
+    its plan keeps one shuffle (the min aggregation), not three."""
+    rounds = spy_rounds(monkeypatch)
+    chain = [(f"n{i}", f"n{i+1}") for i in range(5)]
+    assert path_closure(_edges(spark, chain)).count() == 15
+    plan = final_plan(rounds[1])
+    assert "BroadcastHashJoin" in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_path_closure_horizon_bound(spark):

@@ -187,7 +187,7 @@ from .plans.linkpred import linkpred_oracle_sql, linkpred_scores_ids
 from .plans.node2vec import node2vec_oracle_sql, node2vec_walks
 from .plans.paths import next_path_edges, path_closure, path_star_oracle_sql
 from .plans.degree import degree_histogram, degree_oracle_sql
-from .plans.ppr import ppr_iterate, ppr_iterate_ids, ppr_oracle_sql
+from .plans.ppr import ppr_iterate_ids, ppr_oracle_sql
 from .plans.shapes import shape_profile, shapes_oracle_sql
 from .plans.walks import capped_adjacency, random_walks, walks_oracle_sql
 from .plans.wsp import wsp_ids, wsp_oracle_sql, wsp_weighted_edges
@@ -197,15 +197,13 @@ from .plans.components import (
     cc_graph,
     cc_iterate_ids,
     components_oracle_sql,
-    fits_broadcast,
+    id_edges,
     instance_edges,
     selfloop_edges,
 )
 from .plans.pagerank import (
     pagerank_edges_sl,
-    pagerank_graph,
     pagerank_ids,
-    pagerank_iterate,
     pagerank_iterate_ids,
     pagerank_oracle_sql,
     resource_edges,
@@ -855,20 +853,16 @@ def _kg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kg_pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached resource-edge list of the pagerank/ppr graph."""
-    return shared_frame(
-        spark, f"kg_pr_edges:{sf_dir}",
-        lambda: resource_edges(_kg_cached(spark, sf_dir)), columnar=True,
-    )
-
-
 def _kg_pr_graph(spark: SparkSession, sf_dir: str):
     """Session-cached integer-encoded pagerank/ppr graph (ids, edsl,
     n_nodes) — the dense id mapping with PPR's seed flag and the
     self-row-augmented idst-partitioned in-edge frame every iteration
-    re-reads (plans/pagerank.py pagerank_edges_sl)."""
-    edges = _kg_pr_edges(spark, sf_dir)
+    re-reads (plans/pagerank.py pagerank_edges_sl), both built from the
+    session-cached resource-edge list."""
+    edges = shared_frame(
+        spark, f"kg_pr_edges:{sf_dir}",
+        lambda: resource_edges(_kg_cached(spark, sf_dir)), columnar=True,
+    )
     ids = shared_frame(
         spark, f"kg_pr_ids:{sf_dir}", lambda: pagerank_ids(edges), columnar=True
     )
@@ -883,25 +877,19 @@ def _kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank over the full KG resource graph (see
     plans/pagerank.py): ranks every IRI/bnode by the 3-iteration
     fixed-point recurrence, hash-comparable because the arithmetic is
-    exact and order-free. The resource-edge list (the frame all three
+    exact and order-free. The encoded graph (the frames all three
     iterations re-read) is session-cached alongside the other shared
     inputs, so only the first call pays the KG materialization."""
     ids, edsl, n = _kg_pr_graph(spark, sf_dir)
-    if fits_broadcast(spark, n):
-        return pagerank_iterate_ids(ids, edsl)
-    ed, nodes = pagerank_graph(_kg_pr_edges(spark, sf_dir))
-    return pagerank_iterate(ed, nodes)
+    return pagerank_iterate_ids(ids, edsl, n_nodes=n)
 
 
 def _kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank seeded on the canonical entity nodes
-    (see plans/ppr.py); shares the session-cached resource-edge list
-    with kg_pagerank, so the iterations are the only per-call work."""
+    (see plans/ppr.py); shares the session-cached encoded graph with
+    kg_pagerank, so the iterations are the only per-call work."""
     ids, edsl, n = _kg_pr_graph(spark, sf_dir)
-    if fits_broadcast(spark, n):
-        return ppr_iterate_ids(ids, edsl)
-    ed, nodes = pagerank_graph(_kg_pr_edges(spark, sf_dir))
-    return ppr_iterate(ed, nodes)
+    return ppr_iterate_ids(ids, edsl, n_nodes=n)
 
 
 def _kg_und(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -953,11 +941,7 @@ def _kg_instance_graph(spark: SparkSession, sf_dir: str):
     # paid once at build)
     iund = shared_frame(
         spark, f"kg_cc_iund:{sf_dir}",
-        lambda: und.join(
-            ids.select(F.col("node").alias("src"), F.col("nid").alias("isrc")), "src"
-        )
-        .join(ids.select(F.col("node").alias("dst"), F.col("nid").alias("idst")), "dst")
-        .select("isrc", "idst"),
+        lambda: id_edges(ids, und),
         partition_by=("isrc",),
     )
     iund_sl = shared_frame(
@@ -1165,7 +1149,7 @@ def _kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded k-core peeling over the KG instance graph (see
     plans/kcore.py); shares the session-cached symmetric edge list."""
     ids, iund, _iund_sl = _kg_instance_graph(spark, sf_dir)
-    return kcore_ids(ids, iund)
+    return kcore_ids(ids, iund, n_nodes=shared_rows(spark, f"kg_cc_ids:{sf_dir}"))
 
 
 def _kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1174,7 +1158,11 @@ def _kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction); shares the session-cached symmetric edge list with
     kg_components/kg_bfs."""
     ids, iund, _iund_sl = _kg_instance_graph(spark, sf_dir)
-    return triangle_counts_ids(ids, iund)
+    return triangle_counts_ids(
+        ids, iund,
+        n_nodes=shared_rows(spark, f"kg_cc_ids:{sf_dir}"),
+        n_und=shared_rows(spark, f"kg_cc_iund:{sf_dir}"),
+    )
 
 
 def _kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1270,7 +1258,9 @@ def _kg_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     / resource-allocation, integer fixed-point — see plans/linkpred.py)
     over the session-cached KG instance graph."""
     ids, iund, _iund_sl = _kg_instance_graph(spark, sf_dir)
-    return linkpred_scores_ids(ids, iund)
+    return linkpred_scores_ids(
+        ids, iund, n_nodes=shared_rows(spark, f"kg_cc_ids:{sf_dir}")
+    )
 
 
 def _kg_triples_oracle() -> str:

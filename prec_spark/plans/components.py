@@ -27,20 +27,21 @@ loud convergence probe guarantees the fixed-round answer actually IS
 the connected-components fixpoint — silent non-convergence is
 impossible (the round-4 advice contract, same as simhash CC).
 
-Labels are node-id strings; Spark's ``min``/``least`` and DuckDB's
-``MIN``/``LEAST`` agree because the ids are ASCII and both engines
+Labels are dense integer node ids (``encode_nodes``) numbered in the
+sorted order of the node-id strings, so the min over ids picks the
+node that the oracle's ``MIN``/``LEAST`` over strings picks: the
+orders agree because the ids are ASCII and Spark and DuckDB both
 compare strings bytewise.
 
-Scale notes: the symmetric edge list and node set are built once (and
-session-cached by the entry point); each round is one shuffle-join +
-one aggregation on the edge list plus one node-sized self-join for the
-jump — never more than edge-sized intermediate state, the same
-iterate-over-checkpoint shape as PageRank.  Labels are
-localCheckpointed every round so the plan stays bounded (on a
-real cluster: ``checkpoint()`` against a cluster-visible dir for
-executor-loss resilience).  Rounds needed grow with log(diameter), so
-even a 100 TB graph with million-hop chains stays in the tens of
-rounds.
+Scale notes: the symmetric edge list and node set are built and
+encoded once (and session-cached by the entry point); each round is
+one shuffle-join + one aggregation on the edge list plus one
+node-sized self-join for the jump — never more than edge-sized
+intermediate state.  Labels are localCheckpointed every round so the
+plan stays bounded (on a real cluster: ``checkpoint()`` against a
+cluster-visible dir for executor-loss resilience).  Rounds needed grow
+with log(diameter), so even a 100 TB graph with million-hop chains
+stays in the tens of rounds.
 """
 
 from __future__ import annotations
@@ -94,16 +95,29 @@ def cc_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def encode_nodes(nodes: DataFrame) -> DataFrame:
-    """(node, nid): an ORDER-PRESERVING dense integer id per node —
-    the cc_encode id assignment factored out for graphs that need only
-    the id mapping (pagerank/ppr).  Distributed and deterministic: the
-    sort order is total and zipWithIndex numbers rows in partition
-    order."""
-    spark = nodes.sparkSession
-    return spark.createDataFrame(
-        nodes.orderBy("node").rdd.map(lambda r: r[0]).zipWithIndex(),
-        "node string, nid long",
+    """(node, nid): an ORDER-PRESERVING dense integer id per node
+    (0..n-1 in Spark's byte order), all in the JVM.
+
+    The globally sorted node set is checkpointed, so its partitions and
+    their row order are fixed; one small job collects the row count of
+    each partition, and a node's id is its partition's offset plus its
+    position inside the partition.  ``monotonically_increasing_id`` is
+    exactly ``(partition index << 33) + position``, so subtracting the
+    shifted index leaves the position.  Ids stay dense (empty
+    partitions add nothing), which the 32-bit packing guard of
+    ``triangle_counts_ids`` relies on."""
+    srt = nodes.select("node").orderBy("node").localCheckpoint()
+    counts = dict(
+        srt.groupBy(F.spark_partition_id().alias("pid")).count().collect()
     )
+    base, offsets = 0, []
+    for pid in range(max(counts, default=0) + 1):
+        offsets.append(base - (pid << 33))
+        base += counts.get(pid, 0)
+    offset = F.try_element_at(
+        F.array(*[F.lit(o).cast("long") for o in offsets]), F.spark_partition_id() + 1
+    )
+    return srt.select("node", (offset + F.monotonically_increasing_id()).alias("nid"))
 
 
 def cc_encode(und: DataFrame, nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -113,15 +127,19 @@ def cc_encode(und: DataFrame, nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Every propagation round then shuffles 16-byte long pairs instead
     of IRI/bnode strings, and the integer label space enables the
-    exact sum-based convergence test in cc_iterate.  The ids come from
-    ``zipWithIndex`` over the globally sorted node set — distributed
-    (no single-partition Window) and deterministic, because the sort
-    order is total and zipWithIndex numbers rows in partition order."""
+    exact sum-based convergence test in cc_iterate_ids.  The ids come
+    from ``encode_nodes``: distributed (no single-partition Window),
+    deterministic and JVM-side."""
     ids = encode_nodes(nodes)
+    return ids, id_edges(ids, und)
+
+
+def id_edges(ids: DataFrame, edges: DataFrame, *cols: str) -> DataFrame:
+    """(isrc, idst, *cols): the (src, dst, *cols) edge list ``edges``
+    re-keyed from node strings to the ids of ``ids`` (node, nid)."""
     s_ids = ids.select(F.col("node").alias("src"), F.col("nid").alias("isrc"))
     d_ids = ids.select(F.col("node").alias("dst"), F.col("nid").alias("idst"))
-    iund = und.join(s_ids, "src").join(d_ids, "dst").select("isrc", "idst")
-    return ids, iund
+    return edges.join(s_ids, "src").join(d_ids, "dst").select("isrc", "idst", *cols)
 
 
 def _neighbor_min(iund: DataFrame, lab: DataFrame) -> DataFrame:
@@ -168,6 +186,14 @@ def fits_broadcast(spark, n_rows: int, row_bytes: int = _BCAST_ROW_BYTES) -> boo
         n_rows, row_bytes, thresh, "broadcast" if fast else "shuffle",
     )
     return fast
+
+
+def broadcast_if_fits(spark, n_rows: int):
+    """``F.broadcast`` when ``n_rows`` node-sized rows fit the session's
+    broadcast threshold (``fits_broadcast``), else the identity: the
+    size guard of the graph operators whose broadcast and shuffle paths
+    differ only in the join hint."""
+    return F.broadcast if fits_broadcast(spark, n_rows) else (lambda df: df)
 
 
 def selfloop_edges(ids: DataFrame, iund: DataFrame) -> DataFrame:

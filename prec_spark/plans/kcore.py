@@ -10,9 +10,10 @@ mirrors exactly that contract) with an exact early exit: a peel that
 removes nothing is idempotent, so stopping early never changes a
 value.
 
-Per round: one degree aggregation + two semi-joins restricting the
-edge list to surviving endpoints; the edge list only shrinks, lineage
-is truncated every round. Output is the surviving (node, deg) table.
+Per round: one degree aggregation over the edge list restricted to the
+surviving endpoints (two semi-joins), in dense integer ids; only the
+node-sized survivor set is checkpointed, its size observed in the same
+write. Output is the surviving (node, deg) table.
 """
 
 from __future__ import annotations
@@ -20,44 +21,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import graph_ctes
+from .components import broadcast_if_fits, checkpoint_observed, graph_ctes
 
 K = 5
 PEELS = 6
 
 
-def kcore(und: DataFrame, k: int = K, peels: int = PEELS) -> DataFrame:
-    """(node, deg) of the subgraph surviving ``peels`` rounds of
-    degree-< k removal over the symmetric edge list ``und``."""
-    g = und.localCheckpoint()
-    prev_nodes = None
-    for _ in range(peels):
-        deg = g.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.filter(F.col("deg") >= k).select("src").localCheckpoint()
-        n = keep.count()
-        if prev_nodes is not None and n == prev_nodes:
-            break  # removal-free peel: every further round is a no-op
-        prev_nodes = n
-        k1 = keep.select(F.col("src").alias("n1"))
-        k2 = keep.select(F.col("src").alias("n2"))
-        g = (
-            g.join(k1, g["src"] == k1["n1"], "leftsemi")
-            .join(k2, g["dst"] == k2["n2"], "leftsemi")
-            .localCheckpoint()  # truncate lineage every round
-        )
-    return g.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-
-
 def kcore_ids(
-    ids: DataFrame, iund: DataFrame, k: int = K, peels: int = PEELS
+    ids: DataFrame,
+    iund: DataFrame,
+    k: int = K,
+    peels: int = PEELS,
+    n_nodes: int | None = None,
 ) -> DataFrame:
-    """(node, deg) k-core peeling over the integer-encoded edge list:
-    rounds shuffle 16-byte pairs instead of IRI/bnode strings, and the
-    shrinking survivor set broadcasts into the two semi-joins when it
-    fits the session's threshold, making each peel one map-only pass
-    over the cached edge list (guide §2.3/§3.1).
+    """(node, deg) of the subgraph surviving ``peels`` rounds of
+    degree-< k removal over the integer-encoded symmetric edge list
+    (``cc_encode``; ``n_nodes`` is the row count of ``ids`` when the
+    caller knows it): rounds shuffle 16-byte pairs instead of IRI/bnode
+    strings, and the shrinking survivor set broadcasts into the two
+    semi-joins when it fits the session's threshold, making each peel
+    one map-only pass over the cached edge list (guide §2.3/§3.1).
 
     Survivor sets are NESTED (a node's degree only ever drops while it
     survives, so keep_r ⊆ keep_{r-1}), which makes the classic
@@ -72,14 +55,9 @@ def kcore_ids(
     degree aggregation, exchange-free when the cache is
     isrc-partitioned); only the node-sized survivor frame is ever
     checkpointed."""
-    from .components import fits_broadcast
-
-    spark = ids.sparkSession
-    bcast = (
-        F.broadcast
-        if fits_broadcast(spark, ids.count())
-        else (lambda df: df)
-    )
+    if n_nodes is None:
+        n_nodes = ids.count()
+    bcast = broadcast_if_fits(ids.sparkSession, n_nodes)
     g = iund.select(F.col("isrc").alias("src"), F.col("idst").alias("dst"))
     keep = None
     prev_nodes = None
@@ -93,8 +71,10 @@ def kcore_ids(
                 .join(bcast(k2), g["dst"] == k2["n2"], "leftsemi")
             )
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        nk = deg.filter(F.col("deg") >= k).select("src").localCheckpoint()
-        n = nk.count()
+        nk, probe = checkpoint_observed(
+            deg.filter(F.col("deg") >= k).select("src"), n=F.count(F.lit(1))
+        )
+        n = probe["n"]
         if prev_nodes is not None and n == prev_nodes:
             break  # removal-free peel: every further round is a no-op
         keep = nk

@@ -38,85 +38,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import graph_ctes
+from .components import broadcast_if_fits, graph_ctes
 
 DMAX = 64
 MIN_CN = 2
 
 
-def linkpred_scores(
-    und: DataFrame, dmax: int = DMAX, min_cn: int = MIN_CN
+def linkpred_scores_ids(
+    ids: DataFrame,
+    iund: DataFrame,
+    dmax: int = DMAX,
+    min_cn: int = MIN_CN,
+    n_nodes: int | None = None,
 ) -> DataFrame:
     """(a, b, cn, deg_a, deg_b, jaccard_micro, ra_nano) for every
     non-adjacent pair a < b with >= ``min_cn`` common neighbors of
-    degree <= ``dmax``.  ``und`` must be the symmetric distinct edge
-    list (components/cc_graph shape)."""
-    deg = und.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    # neighbors seen FROM capped centers only: hubs never fan out
-    nbrs = und.join(
-        deg.filter(F.col("deg") <= dmax).withColumnRenamed("node", "src"),
-        "src",
-    )
-    n1 = nbrs.select(
-        F.col("src").alias("z"), F.col("dst").alias("a"),
-        F.col("deg").alias("dz"),
-    )
-    n2 = nbrs.select(F.col("src").alias("z"), F.col("dst").alias("b"))
-    scores = (
-        n1.join(n2, "z")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cn"),
-            F.sum(F.expr("1000000000 div dz")).cast("long").alias("ra_nano"),
-        )
-        .filter(F.col("cn") >= min_cn)
-    )
-    # existing edges are not predictions; und is symmetric so checking
-    # the (a, b) orientation suffices
-    scores = scores.join(
-        und,
-        (scores["a"] == und["src"]) & (scores["b"] == und["dst"]),
-        "left_anti",
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    return (
-        scores.join(da, "a")
-        .join(db, "b")
-        .select(
-            "a",
-            "b",
-            "cn",
-            F.col("deg_a").cast("long").alias("deg_a"),
-            F.col("deg_b").cast("long").alias("deg_b"),
-            F.expr("(1000000 * cn) div (deg_a + deg_b - cn)")
-            .cast("long")
-            .alias("jaccard_micro"),
-            "ra_nano",
-        )
-    )
-
-
-def linkpred_scores_ids(
-    ids: DataFrame, iund: DataFrame, dmax: int = DMAX, min_cn: int = MIN_CN
-) -> DataFrame:
-    """linkpred_scores over the integer-encoded edge list: the wedge
-    join and its (a, b) aggregation shuffle 8-byte ids instead of
-    IRI/bnode strings (the id assignment is order-preserving, so the
-    a < b orientation is bit-identical), node-sized sides broadcast
-    when they fit, and only the final (small) score table maps back to
-    strings."""
-    from .components import fits_broadcast
-
-    spark = ids.sparkSession
-    bcast = (
-        F.broadcast
-        if fits_broadcast(spark, ids.count())
-        else (lambda df: df)
-    )
+    degree <= ``dmax``, over the integer-encoded symmetric edge list
+    (``cc_encode``; ``n_nodes`` is the row count of ``ids`` when the
+    caller knows it).  The wedge enumeration and its (a, b) aggregation
+    shuffle 8-byte ids instead of IRI/bnode strings (the id assignment
+    is order-preserving, so the a < b orientation is bit-identical to
+    the oracle's), node-sized sides broadcast when they fit, and only
+    the final (small) score table maps back to strings."""
+    if n_nodes is None:
+        n_nodes = ids.count()
+    bcast = broadcast_if_fits(ids.sparkSession, n_nodes)
     deg = iund.groupBy(F.col("isrc").alias("n")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -129,9 +75,10 @@ def linkpred_scores_ids(
     # then explode the a < b pairs with a higher-order filter — the
     # neighbor frame crosses the network once (grouped), not twice
     # (both sides of a self-join), and both sort passes disappear.
-    # Pair sets are identical to the n1-join-n2 formulation: for every
-    # center z, every unordered neighbor pair {a, b} appears exactly
-    # once (neighbors are distinct because ``iund`` is distinct).
+    # Pair sets are identical to the oracle's n1-join-n2 self-join: for
+    # every center z, every unordered neighbor pair {a, b} appears
+    # exactly once (neighbors are distinct because ``iund`` is
+    # distinct).
     adj = nbrs.groupBy(F.col("isrc").alias("z"), F.col("deg").alias("dz")).agg(
         F.collect_list("idst").alias("nbs")
     )

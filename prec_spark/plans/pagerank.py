@@ -22,19 +22,23 @@ Dangling nodes emit no mass (the usual simplified variant — the mass
 they lose is not redistributed). ``div`` (Spark) and ``//`` (DuckDB)
 agree because every operand is non-negative.
 
-Scale notes: the edge list with out-degrees attached and the node set
-are localCheckpointed ONCE and reused by every iteration — on a real
-cluster this is the standard iterate-over-checkpoint pattern (use
-``spark.sparkContext.setCheckpointDir`` + ``checkpoint()`` for
-executor-loss resilience at 100 TB; localCheckpoint is the single-box
-equivalent). Each iteration is one shuffle-join on src plus one
-aggregation on dst; the rank frame stays node-sized, never edge-sized.
+Scale notes: the whole-triples ``pagerank`` is an encode -> ids ->
+decode wrapper like ``components``.  The graph is encoded once into
+dense 8-byte ids (``pagerank_ids``) and an in-edge frame carrying
+out-degrees plus one self row per node (``pagerank_edges_sl``), and
+every iteration is one join of that frame with the node-sized mass
+vector on ``isrc`` plus one aggregation on ``idst``.  When the mass
+vector fits the session's broadcast threshold it is broadcast and an
+iteration is one shuffle-free stage; otherwise the same join runs as a
+plain shuffle join, so no side ever has to fit in memory.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .components import broadcast_if_fits, encode_nodes, id_edges
 
 SCALE = 1_000_000_000
 DAMP_NUM, DAMP_DEN = 85, 100
@@ -49,54 +53,11 @@ def resource_edges(triples: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(ed, nodes): the edge list with out-degrees attached, and the
-    distinct node set — the two frames every iteration re-reads.
-    Callers that run PageRank repeatedly should pass a cached/
-    checkpointed ``edges`` so the (possibly expensive) triple source is
-    evaluated once, not once per derived frame."""
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = edges.join(deg, "src")
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    return ed, nodes
-
-
-def pagerank_iterate(
-    ed: DataFrame, nodes: DataFrame, iters: int = ITERS
-) -> DataFrame:
-    """Run the fixed-point loop: per iteration one join on src + one
-    aggregation on dst; the rank frame stays node-sized."""
-    pr = nodes.select("node", F.lit(SCALE).cast("long").alias("mass"))
-    for _ in range(iters):
-        contrib = (
-            ed.join(pr, ed["src"] == pr["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(mass * {DAMP_NUM}) div ({DAMP_DEN} * deg)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        pr = nodes.join(contrib, "node", "left").select(
-            "node",
-            (F.lit(BASE) + F.coalesce("in_mass", F.lit(0)))
-            .cast("long")
-            .alias("mass"),
-        )
-    return pr
-
-
 def pagerank_ids(
     edges: DataFrame, seed_prefix: str = "_:entity_"
 ) -> DataFrame:
     """(node, nid, is_seed): dense integer ids for the pagerank/ppr
     graph's nodes, with PPR's restart-set flag."""
-    from .components import encode_nodes
-
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
@@ -119,9 +80,7 @@ def pagerank_edges_sl(ids: DataFrame, edges: DataFrame) -> DataFrame:
     ``(mass * 85) div (100 * deg)``.  Callers cache it partitioned by
     ``idst``, so that sum needs no exchange — every iteration re-reads
     it."""
-    s_ids = ids.select(F.col("node").alias("src"), F.col("nid").alias("isrc"))
-    d_ids = ids.select(F.col("node").alias("dst"), F.col("nid").alias("idst"))
-    ie = edges.join(s_ids, "src").join(d_ids, "dst").select("isrc", "idst")
+    ie = id_edges(ids, edges)
     deg = ie.groupBy("isrc").agg(F.count(F.lit(1)).alias("deg"))
     return (
         ie.join(deg, "isrc")
@@ -138,14 +97,24 @@ def pagerank_edges_sl(ids: DataFrame, edges: DataFrame) -> DataFrame:
 
 
 def _rank_iterate_ids(
-    ids: DataFrame, edsl: DataFrame, iters: int, personalized: bool
+    ids: DataFrame,
+    edsl: DataFrame,
+    iters: int,
+    personalized: bool,
+    n_nodes: int | None = None,
 ) -> DataFrame:
-    """Shared broadcast-iteration core for pagerank/ppr over the
-    encoded graph: per iteration ONE shuffle-free stage (broadcast the
-    node-sized mass vector, map over the idst-partitioned edge frame,
-    locally aggregate).  3 chained iterations run as a single action —
-    the mass frame is referenced once per iteration, so lineage stays
-    linear and needs no checkpoint."""
+    """Shared iteration core for pagerank/ppr over the encoded graph:
+    per iteration one join of the ``idst``-partitioned edge frame with
+    the node-sized mass vector on ``isrc``, then one local aggregation
+    on ``idst``.  The mass vector is broadcast when ``n_nodes`` rows fit
+    the session's threshold (each iteration is then ONE shuffle-free
+    stage); otherwise the join is a plain shuffle join, in 8-byte ids.
+    The chained iterations run as a single action: the mass frame is
+    referenced once per iteration, so lineage stays linear and needs no
+    checkpoint."""
+    if n_nodes is None:
+        n_nodes = ids.count()
+    bcast = broadcast_if_fits(ids.sparkSession, n_nodes)
     if personalized:
         init = F.when(F.col("is_seed"), F.lit(SCALE)).otherwise(F.lit(0))
         base = F.when(F.col("sseed"), F.lit(BASE)).otherwise(F.lit(0))
@@ -154,7 +123,7 @@ def _rank_iterate_ids(
         base = F.lit(BASE)
     pr = ids.select(F.col("nid").alias("n"), init.cast("long").alias("mass"))
     for _ in range(iters):
-        b = F.broadcast(pr)
+        b = bcast(pr)
         pr = (
             edsl.join(b, edsl["isrc"] == F.col("n"))
             .select(
@@ -166,27 +135,29 @@ def _rank_iterate_ids(
             .groupBy(F.col("idst").alias("n"))
             .agg(F.sum("c").cast("long").alias("mass"))
         )
-    return ids.join(F.broadcast(pr), ids["nid"] == F.col("n")).select(
+    return ids.join(bcast(pr), ids["nid"] == F.col("n")).select(
         "node", "mass"
     )
 
 
 def pagerank_iterate_ids(
-    ids: DataFrame, edsl: DataFrame, iters: int = ITERS
+    ids: DataFrame, edsl: DataFrame, iters: int = ITERS, n_nodes: int | None = None
 ) -> DataFrame:
-    """(node, mass) — the identical recurrence as pagerank_iterate,
-    over the encoded graph (see pagerank_encode)."""
-    return _rank_iterate_ids(ids, edsl, iters, personalized=False)
+    """(node, mass) after ``iters`` iterations over the encoded graph
+    (``pagerank_ids`` + ``pagerank_edges_sl``); ``n_nodes`` is the row
+    count of ``ids`` when the caller knows it (counted otherwise)."""
+    return _rank_iterate_ids(ids, edsl, iters, personalized=False, n_nodes=n_nodes)
 
 
 def pagerank(triples: DataFrame, iters: int = ITERS) -> DataFrame:
-    """(node, mass) for every resource in the triple graph."""
-    # lineage barrier: every derived frame (deg, ed, nodes) and every
-    # iteration re-reads the edges; without the barrier the triple
-    # source would be recomputed once per consumer
+    """(node, mass) for every resource in the triple graph: encode to
+    integer ids, iterate, map back."""
+    # lineage barrier: the id encoding, the degree aggregation and the
+    # edge re-keying all read the edges
     edges = resource_edges(triples).localCheckpoint()
-    ed, nodes = pagerank_graph(edges)
-    return pagerank_iterate(ed, nodes, iters)
+    ids = pagerank_ids(edges).localCheckpoint()
+    edsl = pagerank_edges_sl(ids, edges).localCheckpoint()
+    return pagerank_iterate_ids(ids, edsl, iters)
 
 
 def pagerank_oracle_sql(triples_sql: str, iters: int = ITERS) -> str:

@@ -18,69 +18,31 @@ Semantics (mirrored term-for-term by the SQL oracle):
   contrib(u,v) = (mass(u) * 85) div (100 * outdeg(u))   per edge
 
 3 fixed iterations like pagerank; dangling mass is not redistributed
-(same simplified variant).  Scale shape identical to pagerank: per
-iteration one join on src + one aggregation on dst, rank frame stays
-node-sized, edge list localCheckpointed/cached once by the caller.
+(same simplified variant).  The iterations are pagerank's integer-space
+loop (``pagerank._rank_iterate_ids``) with the seed-gated restart
+term: per iteration one join on ``isrc`` + one aggregation on
+``idst``, the mass vector stays node-sized and is broadcast when it
+fits.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .pagerank import BASE, DAMP_DEN, DAMP_NUM, ITERS, SCALE
+from .pagerank import BASE, DAMP_DEN, DAMP_NUM, ITERS, SCALE, _rank_iterate_ids
 
 SEED_PREFIX = "_:entity_"
 
 
-def _is_seed(col: F.Column) -> F.Column:
-    return F.substring(col, 1, len(SEED_PREFIX)) == SEED_PREFIX
-
-
-def ppr_iterate(
-    ed: DataFrame, nodes: DataFrame, iters: int = ITERS
-) -> DataFrame:
-    """(node, mass) after ``iters`` seed-restarted iterations; same
-    (ed, nodes) inputs as pagerank_iterate (pagerank_graph output)."""
-    seeded = nodes.withColumn("is_seed", _is_seed(F.col("node")))
-    pr = seeded.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(SCALE))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("mass"),
-    )
-    for _ in range(iters):
-        contrib = (
-            ed.join(pr, ed["src"] == pr["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(mass * {DAMP_NUM}) div ({DAMP_DEN} * deg)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        pr = seeded.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.when(F.col("is_seed"), F.lit(BASE)).otherwise(F.lit(0))
-                + F.coalesce("in_mass", F.lit(0))
-            )
-            .cast("long")
-            .alias("mass"),
-        )
-    return pr
-
-
 def ppr_iterate_ids(
-    ids: DataFrame, edsl: DataFrame, iters: int = ITERS
+    ids: DataFrame, edsl: DataFrame, iters: int = ITERS, n_nodes: int | None = None
 ) -> DataFrame:
-    """(node, mass) — the identical seed-restarted recurrence as
-    ppr_iterate, over the encoded graph (pagerank_encode output, whose
-    ``is_seed``/``sseed`` flags mark the '_:entity_' restart set)."""
-    from .pagerank import _rank_iterate_ids
-
-    return _rank_iterate_ids(ids, edsl, iters, personalized=True)
+    """(node, mass) after ``iters`` seed-restarted iterations over the
+    encoded graph (``pagerank_ids`` + ``pagerank_edges_sl``, whose
+    ``is_seed``/``sseed`` flags mark the '_:entity_' restart set); the
+    broadcast guard and its shuffle fallback are pagerank's
+    (``_rank_iterate_ids``)."""
+    return _rank_iterate_ids(ids, edsl, iters, personalized=True, n_nodes=n_nodes)
 
 
 def ppr_oracle_sql(triples_sql: str, iters: int = ITERS) -> str:

@@ -35,97 +35,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import cc_graph, graph_ctes, instance_edges
+from .components import broadcast_if_fits, broadcast_threshold, graph_ctes
 
 
-def oriented_edges(und: DataFrame) -> DataFrame:
-    """(src, dst, ddst): each undirected edge once, low -> high under
-    (degree, node); ddst carries the head's degree for the wedge
-    ordering. ``und`` must be the symmetric distinct edge list."""
-    deg = und.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    ds = deg.select(F.col("node").alias("src"), F.col("deg").alias("dsrc"))
-    dd = deg.select(F.col("node").alias("dst"), F.col("deg").alias("ddst"))
-    return (
-        und.join(ds, "src")
-        .join(dd, "dst")
-        .filter(
-            (F.col("dsrc") < F.col("ddst"))
-            | ((F.col("dsrc") == F.col("ddst")) & (F.col("src") < F.col("dst")))
-        )
-        .select("src", "dst", "ddst")
-    )
-
-
-def triangle_counts(triples: DataFrame) -> DataFrame:
-    """(node, n_tri): triangle participation per node, nodes in >= 1
-    triangle only. Exact, each triangle counted once."""
-    und, _nodes = cc_graph(instance_edges(triples))
-    return triangle_counts_from_und(und)
-
-
-def triangle_counts_from_und(und: DataFrame) -> DataFrame:
-    """Same, from a prebuilt symmetric distinct edge list (lets the
-    entry query share the session-cached graph with components/BFS)."""
-    e = oriented_edges(und).localCheckpoint()  # read 3x (wedge x2 + close)
-    e1 = e.select(
-        F.col("src").alias("a"), F.col("dst").alias("b"),
-        F.col("ddst").alias("db"),
-    )
-    e2 = e.select(
-        F.col("src").alias("a"), F.col("dst").alias("c"),
-        F.col("ddst").alias("dc"),
-    )
-    wedges = e1.join(e2, "a").filter(
-        (F.col("db") < F.col("dc"))
-        | ((F.col("db") == F.col("dc")) & (F.col("b") < F.col("c")))
-    )
-    closing = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    tri = wedges.join(closing, ["b", "c"]).select("a", "b", "c")
-    # one pass over tri (explode) instead of three union branches that
-    # would each re-derive the wedge+close subtree — same corner
-    # multiset, identical counts
-    corners = tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
-    return corners.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tri")
-    )
-
-
-def triangle_counts_ids(ids: DataFrame, iund: DataFrame) -> DataFrame:
-    """(node, n_tri) over the integer-encoded symmetric edge list —
-    the same degree-oriented plan as triangle_counts_from_und, but the
-    wedge/close joins shuffle 8-byte ids instead of IRI/bnode strings
-    (guide-§2.3 narrower types; the id assignment is order-preserving,
-    so the (degree, node) orientation order is bit-identical), and the
-    node-sized degree/back-map sides broadcast when they fit the
-    session's threshold."""
-    from .components import broadcast_threshold, fits_broadcast
-
-    spark = ids.sparkSession
-    n_nodes = ids.count()
-    # the symmetric distinct edge list orients each undirected edge
-    # exactly once, so the oriented list is |iund| / 2 rows — known
-    # without materializing it
-    n_e = iund.count() // 2
+def oriented_edges(iund: DataFrame, bcast=lambda df: df) -> DataFrame:
+    """(isrc, idst, ddst): each undirected edge once, low -> high under
+    (degree, node id); ddst carries the head's degree for the wedge
+    ordering. ``iund`` must be the symmetric distinct integer edge list
+    (``cc_encode``); ``bcast`` wraps the node-sized degree sides."""
     deg = iund.groupBy(F.col("isrc").alias("n")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    bcast = (
-        F.broadcast
-        if fits_broadcast(spark, n_nodes)
-        else (lambda df: df)
-    )
-    # closing-edge probe as a packed-single-long broadcast semi-join:
-    # the wedge frame then never shuffles at all (its (b, c) exchange
-    # and the oriented list's re-exchange both disappear).  Valid when
-    # the ids pack into 32 bits (dense nids, so n_nodes bounds them)
-    # and the packed key set fits the session's broadcast threshold
-    # (~24 B/row in a long-keyed hash relation).
-    bcast_close = n_nodes < (1 << 31) and 0 < n_e * 24 <= broadcast_threshold(spark)
     ds = deg.select(F.col("n").alias("isrc"), F.col("deg").alias("dsrc"))
     dd = deg.select(F.col("n").alias("idst"), F.col("deg").alias("ddst"))
-    e = (
+    return (
         iund.join(bcast(ds), "isrc")
         .join(bcast(dd), "idst")
         .filter(
@@ -133,18 +56,52 @@ def triangle_counts_ids(ids: DataFrame, iund: DataFrame) -> DataFrame:
             | ((F.col("dsrc") == F.col("ddst")) & (F.col("isrc") < F.col("idst")))
         )
         .select("isrc", "idst", "ddst")
-        # read 2x (wedge + close); lazy so the first action
-        # materializes it in the same job instead of a blocking barrier
-        .localCheckpoint(eager=False)
     )
+
+
+def triangle_counts_ids(
+    ids: DataFrame,
+    iund: DataFrame,
+    n_nodes: int | None = None,
+    n_und: int | None = None,
+) -> DataFrame:
+    """(node, n_tri): triangle participation per node, nodes in >= 1
+    triangle only, exact, each triangle counted once — over the
+    integer-encoded symmetric edge list (``cc_encode``).  The
+    wedge/close joins shuffle 8-byte ids instead of IRI/bnode strings
+    (the id assignment is order-preserving, so the (degree, node)
+    orientation order is bit-identical to the oracle's), and the
+    node-sized degree/back-map sides broadcast when they fit the
+    session's threshold.  ``n_nodes`` / ``n_und`` are the row counts of
+    ``ids`` / ``iund`` when the caller knows them (counted otherwise)."""
+    spark = ids.sparkSession
+    if n_nodes is None:
+        n_nodes = ids.count()
+    if n_und is None:
+        n_und = iund.count()
+    # the symmetric distinct edge list orients each undirected edge
+    # exactly once, so the oriented list is |iund| / 2 rows — known
+    # without materializing it
+    n_e = n_und // 2
+    bcast = broadcast_if_fits(spark, n_nodes)
+    # closing-edge probe as a packed-single-long broadcast semi-join:
+    # the wedge frame then never shuffles at all (its (b, c) exchange
+    # and the oriented list's re-exchange both disappear).  Valid when
+    # the ids pack into 32 bits (dense nids, so n_nodes bounds them)
+    # and the packed key set fits the session's broadcast threshold
+    # (~24 B/row in a long-keyed hash relation).
+    bcast_close = n_nodes < (1 << 31) and 0 < n_e * 24 <= broadcast_threshold(spark)
+    # read 2x (wedge + close); lazy so the first action
+    # materializes it in the same job instead of a blocking barrier
+    e = oriented_edges(iund, bcast).localCheckpoint(eager=False)
     # wedge enumeration WITHOUT a self-join: collect each node's
     # oriented out-neighbors (O(sqrt |E|) of them, the arboricity
     # bound) in ONE aggregation, then explode the ordered pairs with a
     # higher-order filter — the oriented edge list crosses the network
     # once (grouped) instead of twice (both sides of a self-join), and
     # both sort passes disappear.  Pair sets are identical to the
-    # e1-join-e2 formulation: per center a, every out-neighbor pair
-    # ordered by (ddst, idst).
+    # oracle's e1-join-e2 self-join: per center a, every out-neighbor
+    # pair ordered by (ddst, idst).
     adj = e.groupBy(F.col("isrc").alias("a")).agg(
         F.collect_list(F.struct("ddst", "idst")).alias("nbs")
     )

@@ -27,7 +27,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bfs import INF, SEED_PREFIX
-from .components import graph_ctes
+from .components import (
+    cc_encode,
+    checkpoint_observed,
+    fits_broadcast,
+    graph_ctes,
+    id_edges,
+)
 
 ROUNDS = 6
 W_MOD = 9
@@ -61,8 +67,6 @@ def wsp(und: DataFrame, rounds: int = ROUNDS) -> DataFrame:
     id space (see :func:`wsp_ids`) — rounds shuffle 24-byte rows
     instead of IRI/bnode strings, the same ~2.5x lever that components
     and BFS use."""
-    from .components import cc_encode
-
     nodes = und.select(F.col("src").alias("node")).distinct()
     ids, _iund = cc_encode(und, nodes)
     return wsp_ids(ids, und, rounds=rounds)
@@ -73,13 +77,8 @@ def wsp_weighted_edges(ids: DataFrame, und: DataFrame) -> DataFrame:
     the STRING endpoints, plus a zero-weight self-loop per node (the
     components/BFS self-loop frame shape — callers materialize it
     partitioned by ``idst``, every round re-reads it)."""
-    s_ids = ids.select(F.col("node").alias("src"), F.col("nid").alias("isrc"))
-    d_ids = ids.select(F.col("node").alias("dst"), F.col("nid").alias("idst"))
     return (
-        und.select("src", "dst", edge_weight_col().alias("w"))
-        .join(s_ids, "src")
-        .join(d_ids, "dst")
-        .select("isrc", "idst", "w")
+        id_edges(ids, und.select("src", "dst", edge_weight_col().alias("w")), "w")
         .unionAll(
             ids.select(
                 F.col("nid").alias("isrc"),
@@ -106,8 +105,6 @@ def wsp_ids(
     frame (the w=0 self-loop carries d(v), so the grouped min IS the
     full relaxation); at cluster scale the co-partitioned shuffle
     formulation is kept."""
-    from .components import checkpoint_observed, fits_broadcast
-
     if wund_sl is None:
         wund_sl = wsp_weighted_edges(ids, und).localCheckpoint()
     if n_nodes is None:

@@ -149,3 +149,37 @@ def test_fast_round_reads_one_label_broadcast(spark, tiny, monkeypatch):
     # operator lines only: a ReusedExchange line also names its source
     assert len(re.findall(r"^[\s:+-]*BroadcastExchange ", plan, re.M)) == 1, plan
     assert "ReusedExchange" in plan, plan
+
+
+def test_encode_nodes_is_dense_sorted_and_jvm_side(spark):
+    """encode_nodes numbers a multi-partition node set 0..n-1 in sorted
+    order without sending a row through a Python worker: no
+    ``PythonRDD`` in the lineage of its output, nor in the outputs of
+    the encodings built on it (``cc_encode``, ``pagerank_ids``)."""
+    from pyspark.sql import functions as F
+
+    from prec_spark.plans.components import encode_nodes
+    from prec_spark.plans.pagerank import pagerank_ids
+
+    n = 500
+    # a scattered permutation of n names over several input partitions
+    edges = spark.range(0, n, numPartitions=7).select(
+        F.format_string("n%04d", (F.col("id") * 7919) % n).alias("src"),
+        F.format_string("n%04d", (F.col("id") * 7919 + 1) % n).alias("dst"),
+    )
+    und, nodes = cc_graph(edges)
+    old = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    # keep the sort's partitions apart, so ids span several of them
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        ids = encode_nodes(nodes)
+        outputs = [ids, *cc_encode(und, nodes), pagerank_ids(edges)]
+        assert ids._jdf.rdd().getNumPartitions() > 1
+        got = [(r.node, r.nid) for r in ids.collect()]
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old)
+    assert sorted(got, key=lambda r: r[1]) == [
+        (f"n{i:04d}", i) for i in range(n)
+    ]
+    for df in outputs:
+        assert "PythonRDD" not in df._jdf.rdd().toDebugString()

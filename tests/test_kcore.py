@@ -3,14 +3,15 @@
 from pyspark.sql import functions as F
 
 from prec_spark.entry_queries import _kg_kcore, _kg_triples
-from prec_spark.plans.components import cc_graph
-from prec_spark.plans.kcore import kcore
+from prec_spark.plans.components import cc_encode, cc_graph
+from prec_spark.plans.kcore import kcore_ids
 
 from .conftest import SF_DIR
 
 
-def _und(spark, pairs):
-    return cc_graph(spark.createDataFrame(pairs, "src string, dst string"))[0]
+def _graph(spark, pairs):
+    """(ids, iund) of the symmetric graph over ``pairs``."""
+    return cc_encode(*cc_graph(spark.createDataFrame(pairs, "src string, dst string")))
 
 
 def test_kcore_cascade(spark):
@@ -18,18 +19,20 @@ def test_kcore_cascade(spark):
     per round (a cascade), leaving exactly the triangle with degree 2."""
     tri = [("a", "b"), ("b", "c"), ("a", "c")]
     chain = [("c", "d"), ("d", "e"), ("e", "f")]
-    got = {r.node: r.deg for r in kcore(_und(spark, tri + chain), k=2, peels=4).collect()}
+    g = _graph(spark, tri + chain)
+    got = {r.node: r.deg for r in kcore_ids(*g, k=2, peels=4).collect()}
     assert got == {"a": 2, "b": 2, "c": 2}
     # a peel budget too small leaves cascade remnants (the contract)
-    one = {r.node for r in kcore(_und(spark, tri + chain), k=2, peels=1).collect()}
+    one = {r.node for r in kcore_ids(*g, k=2, peels=1).collect()}
     assert one == {"a", "b", "c", "d", "e"}  # only f's neighbor e... f removed, e stays this round
 
 
 def test_kcore_early_exit_is_exact(spark):
     """Extra peel budget beyond the fixpoint changes nothing."""
     edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
-    lo = {(r.node, r.deg) for r in kcore(_und(spark, edges), k=2, peels=2).collect()}
-    hi = {(r.node, r.deg) for r in kcore(_und(spark, edges), k=2, peels=50).collect()}
+    g = _graph(spark, edges)
+    lo = {(r.node, r.deg) for r in kcore_ids(*g, k=2, peels=2).collect()}
+    hi = {(r.node, r.deg) for r in kcore_ids(*g, k=2, peels=50).collect()}
     assert lo == hi
 
 

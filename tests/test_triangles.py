@@ -4,10 +4,10 @@ orientation invariants, oracle parity, and plan shape."""
 from pyspark.sql import functions as F
 
 from prec_spark.entry_queries import _kg_triangles, _kg_triples_oracle
-from prec_spark.plans.components import cc_graph
+from prec_spark.plans.components import cc_encode, cc_graph
 from prec_spark.plans.triangles import (
     oriented_edges,
-    triangle_counts_from_und,
+    triangle_counts_ids,
     triangles_oracle_sql,
 )
 
@@ -15,9 +15,10 @@ from .conftest import SF_DIR
 from .oracle_util import compare
 
 
-def _und(spark, pairs):
+def _graph(spark, pairs):
+    """(ids, iund) of the symmetric graph over ``pairs``."""
     e = spark.createDataFrame(pairs, "src string, dst string")
-    return cc_graph(e)[0]
+    return cc_encode(*cc_graph(e))
 
 
 def test_k4_and_chain(spark):
@@ -26,7 +27,7 @@ def test_k4_and_chain(spark):
     chain = [("d", "e"), ("e", "f")]
     out = {
         r.node: r.n_tri
-        for r in triangle_counts_from_und(_und(spark, k4 + chain)).collect()
+        for r in triangle_counts_ids(*_graph(spark, k4 + chain)).collect()
     }
     assert out == {"a": 3, "b": 3, "c": 3, "d": 3}
 
@@ -38,7 +39,7 @@ def test_hub_star_plus_rim(spark):
     rim = [(f"s{i}", f"s{i+1}") for i in range(5)]
     out = {
         r.node: r.n_tri
-        for r in triangle_counts_from_und(_und(spark, spokes + rim)).collect()
+        for r in triangle_counts_ids(*_graph(spark, spokes + rim)).collect()
     }
     assert out["h"] == 5
     assert out["s0"] == 1 and out["s5"] == 1
@@ -48,13 +49,13 @@ def test_hub_star_plus_rim(spark):
 def test_orientation_is_a_partition(spark):
     """Each undirected edge appears exactly once in the oriented list,
     and always pointing low -> high under (degree, node)."""
-    und = _und(spark, [("h", f"s{i}") for i in range(4)] + [("s0", "s1")])
-    e = oriented_edges(und)
-    assert e.count() == und.count() / 2
-    deg = und.groupBy(F.col("src").alias("n")).count()
+    _ids, iund = _graph(spark, [("h", f"s{i}") for i in range(4)] + [("s0", "s1")])
+    e = oriented_edges(iund)
+    assert e.count() == iund.count() / 2
+    deg = iund.groupBy(F.col("isrc").alias("n")).count()
     d = {r.n: r["count"] for r in deg.collect()}
     for r in e.collect():
-        assert (d[r.src], r.src) < (d[r.dst], r.dst)
+        assert (d[r.isrc], r.isrc) < (d[r.idst], r.idst)
 
 
 def test_no_nested_loop_join(spark):
